@@ -3,8 +3,7 @@
 The standard pre-training scrub pass: find/replace e-mail addresses,
 bare IPv4 addresses, E.164-style phone numbers, and US-SSN-shaped
 digit groups before text reaches a model. The reference engine has no
-data plane; this is an LLM-pipeline-first-class operator like
-decontamination (operators/decontam.py).
+data plane; this is an LLM-pipeline-first-class corpus operator.
 
 Everything stays in whole-stage codegen — chained ``regexp_replace`` /
 ``regexp_count`` column expressions, no Python in the hot path — so at

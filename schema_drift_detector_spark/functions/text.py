@@ -3,8 +3,7 @@
 All pure Catalyst expressions (whole-stage codegen, no Python UDFs):
 token counting, character shingles, punctuation/stopword ratios,
 quality scoring, language-ID by stopword voting, document
-fingerprints. Each has a 1:1 ANSI-SQL translation used by the DuckDB
-oracle in __spark_entry__.py.
+fingerprints. Each has a 1:1 ANSI-SQL translation for DuckDB replay.
 """
 
 from __future__ import annotations

@@ -159,8 +159,8 @@ MERSENNE31 = 2_147_483_647  # 2^31 - 1
 def minhash_permutation_params(k: int) -> list[tuple[int, int]]:
     """Deterministic affine-permutation constants (a_i, b_i) over
     GF(2^31-1) — SHARED by the Spark implementation (hash_fn='md5') and
-    the DuckDB oracle builder in __spark_entry__.py, so the two compute
-    bit-identical signatures by construction."""
+    any DuckDB replay of it, so the two compute bit-identical
+    signatures by construction."""
     params = []
     a, b = 1, 0
     for _ in range(k):

@@ -1,104 +1,19 @@
-"""Explicit skew-handling primitives.
+"""Hot-key measurement for explicit salting.
 
 AQE's skew-join splitting (enabled engine-wide in session.py) handles
-most hot-key joins automatically at runtime. This module covers the
-cases AQE cannot: broadcast-impossible dimension sides, deliberate
-pre-salting so a downstream aggregation inherits the balanced layout,
-and engines/readers where AQE is off. north_rule: "handles skew with
-AQE + explicit salting of hot doc_id ranges" — the salted aggregation
-lives in constraints.duplicate_keys; this is the join-side counterpart.
+most hot-key joins automatically at runtime. north_rule: "handles skew
+with AQE + explicit salting of hot doc_id ranges" — the salted
+aggregation lives in constraints.duplicate_keys; this module measures
+the hot keys (heavy_hitters) and sizes its salt (choose_salt_buckets).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
 from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-    hot_keys: Sequence | None = None,
-) -> DataFrame:
-    """Skew-resilient equi-join: a hot key on the LEFT no longer funnels
-    into one reducer.
-
-    Left rows get a PER-ROW salt (a deterministic content hash mod
-    buckets — rows of the same key spread across ``salt_buckets``
-    reducers even when the key is clustered into one input partition,
-    e.g. after a key-partitioned read or groupBy); the RIGHT side is
-    replicated ``salt_buckets`` times so every (key, salt) bucket finds
-    its match. Output columns = left columns + right's non-key columns,
-    exactly as ``left.join(right, key, how)`` would produce. Supported
-    how: inner / left / left_outer.
-
-    ``hot_keys`` (the r4-verdict refinement, fed from the certified
-    ``heavy_hitters`` — a small list of the measured hot key values):
-    salt ONLY rows whose key is hot and replicate ONLY the right rows
-    of hot keys; every cold key joins plainly in the same single join
-    (constant salt 0 on both sides). Right-side shuffle volume drops
-    from total×buckets to cold + hot×buckets — at 100-TB scale the cold
-    fraction dominates, so this is ~a buckets-fold reduction of the
-    replication shuffle. One scan per side, one join either way; the
-    hot list compiles to a codegen isin filter, no extra shuffle.
-
-    DETERMINISM: the salt feeds the join's hash Exchange, so it must be
-    reproducible under task retries — a speculative re-execution that
-    re-salted a row differently would route it to two reducers (dup) or
-    none (loss). Hence xxhash64 over the row's columns, NOT
-    monotonically_increasing_id. Content-identical rows of one hot key
-    collide into one bucket; fully-duplicated hot rows are the one
-    shape this cannot spread (and exactly what duplicate_keys flags).
-
-    Cost model: use for big-big joins where the right side is far
-    smaller than the skewed left but too big (or not allowed) to
-    broadcast; pass ``hot_keys`` whenever a heavy_hitters pass is
-    affordable (it shuffles only metadata-scale sketches).
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    # NOT spark_partition_id + hash(key): that is constant per
-    # (partition, key), so a hot key clustered in one input partition
-    # would still funnel into one reducer. xxhash64 over the row's
-    # hashable columns is per-row-content — join RESULTS are identical
-    # for any salt assignment, only the balance varies. Map-bearing
-    # columns are excluded — Spark's hash expressions reject MapType
-    # RECURSIVELY at analysis time, so array<map<...>> and
-    # struct<m:map<...>> must be skipped too; a frame whose every
-    # column carries a map degenerates to a single bucket, which is
-    # correct, just unbalanced.
-    hashable = [c for c, t in left.dtypes if "map<" not in t]
-    row_salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in hashable]) if hashable else F.lit(0),
-        F.lit(salt_buckets),
-    )
-    all_salts = F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-    if hot_keys is None:
-        lhs = left.withColumn("__salt", row_salt)
-        rhs = right.withColumn("__salt", F.explode(all_salts))
-    else:
-        hot = list(hot_keys)
-        if not hot:
-            # measured skew says no hot key: plain join, zero replication
-            return left.join(right, on=key, how=how)
-        lhs = left.withColumn(
-            "__salt", F.when(F.col(key).isin(hot), row_salt).otherwise(F.lit(0))
-        )
-        rhs = right.withColumn(
-            "__salt",
-            F.explode(
-                F.when(F.col(key).isin(hot), all_salts).otherwise(F.array(F.lit(0)))
-            ),
-        )
-    joined = lhs.join(rhs, on=[key, "__salt"], how=how)
-    return joined.drop("__salt")
 
 
 def heavy_hitters(

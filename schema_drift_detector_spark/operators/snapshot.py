@@ -6,14 +6,16 @@ Reference parity:
   - previous-snapshot resolution (R11): snapshot_persistence_agent.py:174-182
     (ORDER BY timestamp DESC LIMIT 1 per component) → top-1-per-key window
   - persist (R12): snapshot_persistence_agent.py:154-273 — immutable
-    append, uuid ids, PREVIOUS_SNAPSHOT chain → lag() window
+    append, uuid ids; the PREVIOUS_SNAPSHOT chain is resolved per call
+    (plans/store.py)
   - PII / metadata-only guard (R10): csv_crawler_agent.py:113-127 — the
     snapshot store must never contain raw data rows
 
 Spark-first: the snapshot store is an append-only parquet/iceberg table
-partitioned by (entity, epoch); the Neo4j version chain becomes a lag()
-window over timestamp. Store tables are tiny (metadata only) relative to
-the 10^12-doc input — all heavy lifting stays in the profile pass.
+partitioned by (entity, epoch); the Neo4j version chain becomes a
+most-recent-other-snapshot lookup by timestamp. Store tables are tiny
+(metadata only) relative to the 10^12-doc input — all heavy lifting
+stays in the profile pass.
 """
 
 from __future__ import annotations
@@ -139,15 +141,3 @@ def latest_snapshot_per_entity(snapshots: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def with_previous_snapshot(snapshots: DataFrame) -> DataFrame:
-    """Materialize the PREVIOUS_SNAPSHOT chain
-    (snapshot_persistence_agent.py:252-258) as a lag() column."""
-    w = Window.partitionBy("entity").orderBy(F.col("timestamp").asc())
-    return snapshots.withColumn("previous_snapshot_id", F.lag("snapshot_id").over(w))
-
-
-# R13 (impacted pipelines) lives in plans/catalog.py::
-# impacted_pipelines_for — left_semi against the broadcast entity list;
-# a second inner-join+distinct variant here was dead duplication.

@@ -12,18 +12,12 @@ functions, mirroring the reference exactly:
     critical → pause; any manual action → manual_review; drift with
     auto-heal policy and no manual actions → auto_heal; else
     manual_review.
-
-A DataFrame variant of healing (healing_actions_df) is provided for
-bulk generation across many entities' change rows in one pass.
 """
 
 from __future__ import annotations
 
 import uuid
 from typing import Any
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------------------------
@@ -94,46 +88,6 @@ def healing_plan(
         "skipped": False,
         "generated_by": "healer_agent",
     }
-
-
-def healing_actions_df(changes: DataFrame, table_name: str = "{table_name}") -> DataFrame:
-    """Bulk healing generation over change rows (diff.diff_fields output)
-    — the same strings healing_actions emits driver-side, as Catalyst
-    expressions, for fleets of entities: a missing dtype renders as
-    'None' (python f-string semantics) and '%' in the table name is
-    escaped before it reaches format_string."""
-    tn = table_name.replace("%", "%%")
-    ftype = F.coalesce(F.col("after")["dtype"], F.lit("None"))
-    return changes.select(
-        *[c for c in changes.columns if c not in ("before", "after", "sort_key")],
-        F.when(F.col("op") == "remove", F.lit("manual")).otherwise(F.lit("sql")).alias("type"),
-        F.when(
-            F.col("op") == "add",
-            F.format_string(f"ALTER TABLE {tn} ADD COLUMN %s %s;", F.col("field"), ftype),
-        )
-        .when(
-            F.col("op") == "change",
-            F.format_string(f"ALTER TABLE {tn} ALTER COLUMN %s TYPE %s;", F.col("field"), ftype),
-        )
-        .otherwise(F.format_string("-- Manual review required for removed column: %s", F.col("field")))
-        .alias("script"),
-        F.when(F.col("op") == "add", 90)
-        .when(F.col("op") == "change", 70)
-        .otherwise(100)
-        .alias("confidence"),
-        F.when(
-            F.col("op") == "add",
-            F.format_string("Add missing column %s", F.col("field")),
-        )
-        .when(
-            F.col("op") == "change",
-            F.format_string("Change type of column %s to %s", F.col("field"), ftype),
-        )
-        .otherwise(
-            F.format_string("Column %s was removed. Review required.", F.col("field"))
-        )
-        .alias("description"),
-    )
 
 
 # --------------------------------------------------------------------------

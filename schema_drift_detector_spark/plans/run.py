@@ -108,8 +108,7 @@ def run_validation(
     # per-SECTION merge: a partial override like
     # {'distribution_drift': {'ks_threshold': 0.2}} inherits the rest of
     # that section's defaults (lo/hi/nbins) instead of KeyError-ing after
-    # the snapshot work already ran — same deep-merge streaming/epochs.py
-    # applies to this spec
+    # the snapshot work already ran
     spec = {
         k: {**DEFAULT_SPEC[k], **v}
         if isinstance(v, dict) and isinstance(DEFAULT_SPEC.get(k), dict)

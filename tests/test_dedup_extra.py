@@ -1,11 +1,10 @@
-"""Gap-filling tests: survivor-keeping exact dedup and bulk healing DF."""
+"""Gap-filling tests: survivor-keeping exact dedup and sampling."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from schema_drift_detector_spark.operators.dedup import drop_exact_duplicates, exact_duplicates
-from schema_drift_detector_spark.plans.policy import healing_actions_df
 
 
 def test_drop_exact_duplicates_keeps_min_id(spark):
@@ -23,25 +22,6 @@ def test_drop_exact_duplicates_keeps_min_id(spark):
         assert kept[fp] == keep_id
     # idempotent
     assert drop_exact_duplicates(deduped, "event_id", "props").count() == n_groups
-
-
-def test_healing_actions_df_matches_driver_strings(spark):
-    from schema_drift_detector_spark.model import FIELD_SCHEMA
-    from schema_drift_detector_spark.operators.diff import diff_fields
-
-    before = spark.createDataFrame(
-        [("gone", "string", True, 0), ("typed", "int", True, 1)], FIELD_SCHEMA
-    )
-    after = spark.createDataFrame(
-        [("typed", "string", True, 1), ("fresh", "date", True, 2)], FIELD_SCHEMA
-    )
-    acts = {r.field: r for r in healing_actions_df(diff_fields(before, after)).collect()}
-    assert acts["fresh"].script == "ALTER TABLE {table_name} ADD COLUMN fresh date;"
-    assert acts["fresh"].type == "sql" and acts["fresh"].confidence == 90
-    assert acts["typed"].script == "ALTER TABLE {table_name} ALTER COLUMN typed TYPE string;"
-    assert acts["typed"].confidence == 70
-    assert acts["gone"].script == "-- Manual review required for removed column: gone"
-    assert acts["gone"].type == "manual" and acts["gone"].confidence == 100
 
 
 def test_drop_exact_duplicates_null_content_keeps_one(spark):

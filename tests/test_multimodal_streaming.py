@@ -11,6 +11,7 @@ from schema_drift_detector_spark.operators.multimodal import (
     MAGIC,
     decode_media,
     extract_byte_features,
+    resize_media,
     sample_frames,
     synth_media,
 )
@@ -62,6 +63,17 @@ def test_decode_strict_raises_on_foreign_blob(spark):
     with pytest.raises(Exception) as ei:
         decode_media(foreign, strict=True).collect()
     assert "NotImplementedError" in str(ei.value) or "stubbed" in str(ei.value)
+
+
+def test_resize_media(spark):
+    media = synth_media(spark, SynthConfig(), n=40).cache()
+    small = resize_media(media, factor=2)
+    dec = {r.media_ref: r for r in decode_media(small).collect()}
+    orig = {r.media_ref: r for r in media.collect()}
+    for ref, d in dec.items():
+        assert d.decoder == "sdxm"
+        assert d.width == max(1, orig[ref].width // 2)
+        assert d.height == max(1, orig[ref].height // 2)
 
 
 def test_frame_sampling(spark, media):
@@ -292,7 +304,7 @@ def test_stream_dedup_state_survives_restart(spark, tmp_path_factory):
 
 def test_drop_duplicates_within_watermark_pinned_semantics(spark, tmp_path_factory):
     """Pins the UNDOCUMENTED Spark internals the certified
-    stream_dedup_watermark oracle (__spark_entry__.py) relies on, so a
+    stream_dedup_watermark oracle relies on, so a
     Spark upgrade that changes them fails HERE with a named assumption
     instead of a confusing oracle hash mismatch (ADVICE r4). Pinned on
     Spark 4.1 dropDuplicatesWithinWatermark:

@@ -1,0 +1,102 @@
+"""Every module in the package must be reachable from the validation
+path: plans.run (run_validation), plus session and sources.{io,synth}
+that perfbench drives. A module nothing imports is deleted, not kept.
+
+The corpus-toolkit modules in PENDING_DELETION predate that rule and
+are still unreached; they go in later, test-sized steps. The list only
+shrinks: a new unreached module fails, and so does a listed module that
+is deleted or becomes reached without leaving the list.
+
+Reachability is static: the AST imports of each reached module,
+function-level imports included, followed transitively. Importing a
+submodule also imports its parent packages."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = "schema_drift_detector_spark"
+ROOT = Path(__file__).resolve().parents[1] / PKG
+ENTRY_POINTS = ("plans.run", "session", "sources.io", "sources.synth")
+PENDING_DELETION = frozenset(
+    {
+        "functions/cms.py",
+        "functions/normalize.py",
+        "functions/pii.py",
+        "functions/similarity.py",
+        "functions/text.py",
+        "operators/ann.py",
+        "operators/classify.py",
+        "operators/cleaning.py",
+        "operators/dedup.py",
+        "operators/incremental.py",
+        "operators/layout.py",
+        "operators/multimodal.py",
+        "operators/packing.py",
+        "operators/quality_lm.py",
+        "operators/quantize.py",
+        "operators/reputation.py",
+        "operators/resample.py",
+        "operators/retrieval.py",
+        "operators/sampling.py",
+        "operators/substring.py",
+        "streaming/__init__.py",
+        "streaming/epochs.py",
+        "streaming/stateful.py",
+    }
+)
+
+
+def _module_file(name: str) -> Path | None:
+    p = ROOT.joinpath(*name.split(".")[1:])
+    if (p / "__init__.py").is_file():
+        return p / "__init__.py"
+    if p.with_suffix(".py").is_file():
+        return p.with_suffix(".py")
+    return None
+
+
+def _imported_modules(name: str) -> set[str]:
+    """Package modules named by any import statement in ``name``; for
+    ``from m import x`` both ``m`` and ``m.x`` are candidates, since
+    ``x`` may be a submodule."""
+    path = _module_file(name)
+    package = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+    named: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            named.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[: len(package) - node.level + 1]
+                module = ".".join(base + ([node.module] if node.module else []))
+            else:
+                module = node.module or ""
+            named.add(module)
+            named.update(f"{module}.{a.name}" for a in node.names)
+    return {m for m in named if m.split(".")[0] == PKG and _module_file(m)}
+
+
+def _reached_files() -> set[Path]:
+    seen: set[str] = set()
+    stack = [f"{PKG}.{m}" for m in ENTRY_POINTS]
+    while stack:
+        name = stack.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        parts = name.split(".")
+        stack.extend(".".join(parts[:i]) for i in range(1, len(parts)))
+        stack.extend(_imported_modules(name))
+    return {_module_file(m) for m in seen}
+
+
+def test_every_package_module_is_reached_from_the_validation_path():
+    unreached = sorted(
+        str(p.relative_to(ROOT)) for p in set(ROOT.rglob("*.py")) - _reached_files()
+    )
+    new = sorted(set(unreached) - PENDING_DELETION)
+    gone = sorted(PENDING_DELETION - set(unreached))
+    assert new == [], f"{len(new)} modules unreached: {new}"
+    assert gone == [], f"deleted or now reached; drop from PENDING_DELETION: {gone}"

@@ -228,47 +228,6 @@ def _task_stats(spark, fn):
     return out
 
 
-def test_salted_join_has_no_straggler_reducer(spark):
-    """SURVEY §7.4 promise: prove via Spark task metrics that the salted
-    join BALANCES the hot key across reducers, against a measured
-    unsalted baseline that demonstrably straggles on the same fixture
-    (AQE off — salting is the defense where AQE cannot act)."""
-    from statistics import median
-
-    from schema_drift_detector_spark.operators.skew import salted_join
-
-    left = spark.range(200_000).select(
-        F.when(F.col("id") % 5 < 2, F.lit("HOT"))
-        .otherwise(F.format_string("k-%06d", F.col("id") % 40_000))
-        .alias("k"),
-        F.col("id").alias("lv"),
-    )
-    right = spark.range(40_000).select(
-        F.format_string("k-%06d", F.col("id")).alias("k"),
-        F.col("id").alias("rv"),
-    ).union(spark.createDataFrame([("HOT", -1)], ["k", "rv"]))
-
-    def join_read_balance(df) -> float:
-        stats = _task_stats(spark, lambda: df.write.format("noop").mode("overwrite").save())
-        # the join stage is the one with the largest total shuffle READ
-        stage = max(stats, key=lambda s: sum(s["reads"]))
-        busy = sorted(r for r in stage["reads"] if r > 0)
-        assert len(busy) >= 4, f"want a real reducer stage, got {stage}"
-        return busy[-1] / median(busy)
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = join_read_balance(left.join(right, "k", "inner"))
-        salted = join_read_balance(salted_join(left, right, "k", salt_buckets=16))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # unsalted: one reducer drags the whole 40% hot key; salted: spread
-    assert plain >= 5.0, f"fixture no longer skews (plain balance {plain:.1f})"
-    assert salted <= 3.0, f"salted join still has a straggler (balance {salted:.1f})"
-
-
 def test_salted_uniqueness_agg_is_balanced(spark):
     """duplicate_keys' salted two-phase aggregation: no reducer reads a
     disproportionate share even with 40% of rows on one key."""
@@ -413,61 +372,3 @@ def test_resolve_snapshot_chain_matches_legacy_pair(spark, tmp_path_factory):
     store.persist_snapshot(spark, d, "other", 0, fields, source_path="run-c")
     sid4, prev4, _ = store.resolve_snapshot_chain(spark, d, "docs", 2, "run-d")
     assert prev4 == sid3 == store.previous_snapshot(spark, d, "docs", sid4)
-
-
-def test_salted_join_hot_keys_equivalence_and_shuffle_volume(spark):
-    """r4 verdict #2: hot-key-only salting must (a) return exactly the
-    plain join's rows and (b) shuffle right-side records ≈ cold +
-    hot×buckets instead of total×buckets — proven from task metrics."""
-    from schema_drift_detector_spark.operators.skew import salted_join
-
-    n_left, n_cold, buckets = 200_000, 40_000, 16
-    left = spark.range(n_left).select(
-        F.when(F.col("id") % 5 < 2, F.lit("HOT"))
-        .otherwise(F.format_string("k-%06d", F.col("id") % n_cold))
-        .alias("k"),
-        F.col("id").alias("lv"),
-    )
-    right = spark.range(n_cold).select(
-        F.format_string("k-%06d", F.col("id")).alias("k"),
-        F.col("id").alias("rv"),
-    ).union(spark.createDataFrame([("HOT", -1)], ["k", "rv"]))
-
-    expected = sorted(
-        (r.k, r.lv, r.rv) for r in left.join(right, "k", "inner").collect()
-    )
-    got = sorted(
-        (r.k, r.lv, r.rv)
-        for r in salted_join(
-            left, right, "k", buckets, "inner", hot_keys=["HOT"]
-        ).collect()
-    )
-    assert got == expected
-    # measured-no-hot-key shortcut: empty list → plain join, same rows
-    got_plain = sorted(
-        (r.k, r.lv, r.rv)
-        for r in salted_join(left, right, "k", buckets, "inner", hot_keys=[]).collect()
-    )
-    assert got_plain == expected
-
-    def total_writes(df) -> int:
-        stats = _task_stats(
-            spark, lambda: df.write.format("noop").mode("overwrite").save()
-        )
-        return sum(sum(s["writes"]) for s in stats)
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        full = total_writes(salted_join(left, right, "k", buckets))
-        hot = total_writes(
-            salted_join(left, right, "k", buckets, hot_keys=["HOT"])
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # exact record accounting (noop sink: the join's two map sides are
-    # the only shuffle writes): full replicates every right row ×buckets,
-    # hot-only replicates just the one hot key's row
-    assert full == n_left + (n_cold + 1) * buckets, full
-    assert hot == n_left + n_cold + 1 * buckets, hot

@@ -71,25 +71,31 @@ def test_decision_rule():
     assert decide(True, "warning", heal_sql, False) == "manual_review"
 
 
-def test_healing_df_matches_driver_strings_edge_cases(spark):
-    """Bulk and driver healing paths emit IDENTICAL scripts, including a
-    missing dtype (renders 'None') and a '%' in the table name."""
-    from schema_drift_detector_spark.plans.policy import healing_actions, healing_actions_df
-
+def test_healing_strings_edge_cases():
+    """A missing dtype renders as 'None' (f-string semantics) and a '%'
+    in the table name passes through verbatim."""
     changes = [
         {"op": "add", "field": "x", "after": {"dtype": None}},
         {"op": "change", "field": "y", "after": {"dtype": "string"}},
         {"op": "remove", "field": "z", "after": None},
     ]
-    tn = "sales_%_monthly"
-    driver = healing_actions(changes, tn)
-    df = spark.createDataFrame(
-        [("add", "x", None, (None,)), ("change", "y", None, ("string",)),
-         ("remove", "z", None, None)],
-        "op string, field string, before struct<dtype:string>, after struct<dtype:string>",
-    )
-    bulk = {r.field: r for r in healing_actions_df(df, tn).collect()}
-    for act, f in zip(driver, ["x", "y", "z"]):
-        assert bulk[f].script == act["script"], f
-        assert bulk[f].type == act["type"] and bulk[f].confidence == act["confidence"]
-        assert bulk[f].description == act["description"]
+    assert healing_actions(changes, "sales_%_monthly") == [
+        {
+            "type": "sql",
+            "script": "ALTER TABLE sales_%_monthly ADD COLUMN x None;",
+            "confidence": 90,
+            "description": "Add missing column x",
+        },
+        {
+            "type": "sql",
+            "script": "ALTER TABLE sales_%_monthly ALTER COLUMN y TYPE string;",
+            "confidence": 70,
+            "description": "Change type of column y to string",
+        },
+        {
+            "type": "manual",
+            "script": "-- Manual review required for removed column: z",
+            "confidence": 100,
+            "description": "Column z was removed. Review required.",
+        },
+    ]

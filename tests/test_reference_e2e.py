@@ -73,15 +73,20 @@ def test_csv_drift_scenario(spark, tmp_path_factory):
 
 
 def test_golden_csv_files_end_to_end(spark, tmp_path_factory):
-    """The reference's ACTUAL example files through the bounded 32 KiB
-    header read (R4, csv_crawler_agent.py:129-141): snapshot fields and
-    the drift report must reproduce examples/*/csv_crawler_agent_output
-    .json and examples/drift/detector_agent_output.json field-for-field."""
+    """The reference's example files through the bounded 32 KiB header
+    read (R4, csv_crawler_agent.py:129-141): snapshot fields and the
+    drift report must reproduce examples/*/csv_crawler_agent_output.json
+    and examples/drift/detector_agent_output.json field-for-field.
+
+    tests/fixtures/reference_examples vendors the two people-info.csv
+    header lines and, of each golden JSON, the fields asserted here
+    (FIXTURES.md F4)."""
     import json
+    from pathlib import Path
 
     from schema_drift_detector_spark.operators.snapshot import read_csv_header_bounded
 
-    ex = "/root/reference/examples"
+    ex = Path(__file__).resolve().parent / "fixtures" / "reference_examples"
     store_dir = f"{tmp_path_factory.mktemp('golden')}/store"
 
     def golden_fields(scenario):
@@ -146,7 +151,6 @@ def test_salted_uniqueness_extreme_skew(spark):
     a single reducer — salt splits it across buckets first)."""
     import pyspark.sql.functions as F
 
-    from schema_drift_detector_spark.operators.dedup import exact_duplicates
     from schema_drift_detector_spark.operators.constraints import duplicate_keys
 
     n = 500_000
@@ -157,42 +161,6 @@ def test_salted_uniqueness_extreme_skew(spark):
     )
     dups = {r["doc_id"]: r["n_occurrences"] for r in duplicate_keys(df, "doc_id", 32).collect()}
     assert dups == {"HOT-KEY": n // 5 * 2}
-
-
-def test_salted_join_matches_plain_join_under_skew(spark):
-    """40% of 200k left rows share one key; salted_join must produce the
-    exact multiset a plain join produces (incl. right-side duplicate
-    keys and left-outer nulls), with the hot key spread across salt
-    buckets instead of one reducer."""
-    import pyspark.sql.functions as F
-
-    from schema_drift_detector_spark.operators.skew import salted_join
-
-    left = spark.range(200_000).select(
-        F.when(F.col("id") % 5 < 2, F.lit("HOT"))
-        .otherwise(F.format_string("k-%06d", F.col("id") % 1000))
-        .alias("k"),
-        F.col("id").alias("lv"),
-    )
-    # right has a duplicate key row (multiplicity must be preserved) and
-    # is missing some left keys (left-outer null path)
-    right = spark.createDataFrame(
-        [("HOT", 1), ("HOT", 2), ("k-000001", 10), ("k-000002", 20)], ["k", "rv"]
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for how in ("inner", "left"):
-            plain = left.join(right, "k", how).groupBy("k", "rv").count()
-            salted = salted_join(left, right, "k", salt_buckets=8, how=how).groupBy(
-                "k", "rv"
-            ).count()
-            a = {(r.k, r.rv): r["count"] for r in plain.collect()}
-            b = {(r.k, r.rv): r["count"] for r in salted.collect()}
-            assert a == b, f"mismatch for how={how}"
-            if how == "inner":
-                assert a[("HOT", 1)] == 80_000 and a[("HOT", 2)] == 80_000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_winnowing_forms_value_parity(spark):
