@@ -5,11 +5,12 @@ Maps the reference's metadata objects to Spark StructTypes:
   - asset_catalog       referential-integrity dimension
   - snapshot fields     ≙ reference FieldMeta {name,type,nullable,ordinal}
                         (csv_crawler_agent.py:277, detector_agent.py:188-194)
-  - snapshots/profiles  ≙ Neo4j Snapshot/SnapshotField graph
-                        (infra/neo4j/init_schema.cypher:16-32)
+  - profiles            per-partition column profiles of a snapshot
   - changes             ≙ drift-report Change rows (detector_agent.py:569-588)
   - verdicts/violations ≙ drift report + per-row violation evidence
-  - manifest            checkpoint/lineage rows (north_rule)
+
+The snapshot store and the checkpoint manifest are JSON records, not
+tables (plans/store.py, plans/manifest.py).
 """
 
 from __future__ import annotations
@@ -50,17 +51,6 @@ FIELD_SCHEMA = T.StructType(
         T.StructField("dtype", T.StringType(), True),
         T.StructField("nullable", T.BooleanType(), True),
         T.StructField("ordinal", T.IntegerType(), True),
-    ]
-)
-
-SNAPSHOT_SCHEMA = T.StructType(
-    [
-        T.StructField("snapshot_id", T.StringType(), False),
-        T.StructField("entity", T.StringType(), False),
-        T.StructField("epoch", T.IntegerType(), True),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("created_by", T.StringType(), True),
-        T.StructField("source_path", T.StringType(), True),
     ]
 )
 
@@ -108,19 +98,6 @@ VIOLATION_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), True),
         T.StructField("media_ref", T.StringType(), True),
         T.StructField("span_order", T.IntegerType(), True),
-    ]
-)
-
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("finished_at", T.TimestampType(), True),
-        T.StructField("docs_validated", T.LongType(), True),
-        T.StructField("metrics", T.StringType(), True),  # JSON
-        T.StructField("lineage", T.StringType(), True),  # JSON
     ]
 )
 

@@ -19,17 +19,22 @@ detector_agent.py:559-610 (``_fallback_diff``), replicated exactly:
     (/root/reference/examples/no_drfit/detector_agent_no_change_output.json)
   - first-snapshot edge case (:563): before=None ⇒ every field 'add'
 
-Spark-first design: the dict comparison becomes ONE full-outer equi-join
-on ``lower(name)`` (+ any grouping keys), so a single shuffle diffs
-millions of (entity, partition) snapshot pairs at once — this is how the
-operator survives 10^12-doc scale where snapshots arrive per partition.
-Classification is a Catalyst ``when`` cascade (whole-stage codegen; no
-Python in the hot path).
+Two forms of the same semantics:
+
+  - ``diff_field_lists``: one snapshot pair as plain field lists, the
+    reference's dict comparison on the driver. run_validation diffs one
+    schema of tens of fields per call, which needs no Spark job.
+  - ``diff_fields`` + ``drift_report``: the keyed multi-entity diff. The
+    dict comparison becomes ONE full-outer equi-join on ``lower(name)``
+    (+ any grouping keys), so a single shuffle diffs millions of
+    (entity, partition) snapshot pairs at once. Classification is a
+    Catalyst ``when`` cascade (whole-stage codegen; no Python in the
+    hot path).
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,6 +42,74 @@ from pyspark.sql import functions as F
 NO_DRIFT_SUMMARY = "no schema drift detected"
 
 _FIELD_COLS = ("name", "dtype", "nullable", "ordinal")
+
+
+def _classify(b: dict[str, Any], a: dict[str, Any]) -> tuple[str, str] | None:
+    """(severity, notes) of a field present on both sides, or None when
+    equal: first difference wins (detector_agent.py:569-583)."""
+    if (b.get("dtype") or "").lower() != (a.get("dtype") or "").lower():
+        return "high", "type changed"
+    if bool(b.get("nullable")) != bool(a.get("nullable")):
+        return ("high" if b.get("nullable") and not a.get("nullable") else "medium"), "nullable changed"
+    if int(b.get("ordinal") or 0) != int(a.get("ordinal") or 0):
+        return "low", "ordinal changed"
+    return None
+
+
+def diff_field_lists(
+    before: Sequence[dict[str, Any]], after: Sequence[dict[str, Any]]
+) -> dict[str, Any]:
+    """Drift report of two field lists (FieldMeta dicts: name, dtype,
+    nullable, ordinal) — detector_agent.py:559-610 ``_fallback_diff``.
+
+    Returns {drift_detected, changes, summary, severity}; each change is
+    {op, field, before, after, severity, notes}, with ``before``/``after``
+    the field dicts (None on the missing side), the same shape as a
+    collected ``drift_report`` row.
+    """
+
+    def by_key(fields):
+        # dict build: the FIRST entry of a lower-cased name fixes its
+        # position, the LAST entry's payload wins
+        out: dict[str, dict[str, Any]] = {}
+        for f in fields:
+            out[(f.get("name") or "").lower()] = {c: f.get(c) for c in _FIELD_COLS}
+        return out
+
+    def change(op, b, a, severity, notes):
+        return {
+            "op": op,
+            "field": (a if b is None else b)["name"],
+            "before": b,
+            "after": a,
+            "severity": severity,
+            "notes": notes,
+        }
+
+    b_map, a_map = by_key(before), by_key(after)
+    changes = []
+    for k, b in b_map.items():
+        a = a_map.get(k)
+        if a is None:
+            changes.append(change("remove", b, None, "critical", "field removed"))
+        elif (diff := _classify(b, a)) is not None:
+            changes.append(change("change", b, a, *diff))
+    changes += [change("add", None, a, "low", "field added") for k, a in a_map.items() if k not in b_map]
+    # overall: critical iff any REMOVE (keyed on the op), else warning
+    # iff any high change (detector_agent.py:590-598)
+    if any(c["op"] == "remove" for c in changes):
+        severity = "critical"
+    elif any(c["severity"] == "high" for c in changes):
+        severity = "warning"
+    else:
+        severity = "info"
+    return {
+        "drift_detected": bool(changes),
+        "changes": changes,
+        "summary": " ; ".join(f"{c['op']} {c['field']} ({c['severity']})" for c in changes)
+        or NO_DRIFT_SUMMARY,
+        "severity": severity,
+    }
 
 
 def _lower_key(name: Column | str = "name") -> Column:

@@ -3,28 +3,24 @@
 Reference parity:
   - snapshot construction (R8): csv_crawler_agent.py:270-291 — headers →
     [{name, type, nullable=True, ordinal=i}] with name-heuristic types
-  - previous-snapshot resolution (R11): snapshot_persistence_agent.py:174-182
-    (ORDER BY timestamp DESC LIMIT 1 per component) → top-1-per-key window
-  - persist (R12): snapshot_persistence_agent.py:154-273 — immutable
-    append, uuid ids; the PREVIOUS_SNAPSHOT chain is resolved per call
-    (plans/store.py)
+  - previous-snapshot resolution (R11) and persist (R12):
+    snapshot_persistence_agent.py:154-273 — immutable records with uuid
+    ids; the PREVIOUS_SNAPSHOT chain is a most-recent-other-snapshot
+    lookup by timestamp, resolved per call on the driver (plans/store.py)
   - PII / metadata-only guard (R10): csv_crawler_agent.py:113-127 — the
     snapshot store must never contain raw data rows
 
-Spark-first: the snapshot store is an append-only parquet/iceberg table
-partitioned by (entity, epoch); the Neo4j version chain becomes a
-most-recent-other-snapshot lookup by timestamp. Store tables are tiny
-(metadata only) relative to the 10^12-doc input — all heavy lifting
-stays in the profile pass.
+A snapshot is a schema's field list — tens of entries next to the
+10^12-doc input — so it is built and stored on the driver; all heavy
+lifting stays in the profile pass.
 """
 
 from __future__ import annotations
 
 import uuid
-from typing import Sequence
+from typing import Any, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.inference import infer_type_from_name
@@ -40,27 +36,33 @@ def new_snapshot_id() -> str:
     return str(uuid.uuid4())
 
 
-def fields_from_schema(
-    spark: SparkSession,
-    schema: T.StructType,
-    use_name_heuristic: bool = False,
-) -> DataFrame:
-    """StructType → fields DataFrame (name, dtype, nullable, ordinal).
+def field_list(schema: T.StructType, use_name_heuristic: bool = False) -> list[dict[str, Any]]:
+    """StructType → FieldMeta dicts (name, dtype, nullable, ordinal), in
+    schema order.
 
     ``use_name_heuristic=True`` reproduces the reference crawler's
     metadata-only inference (R7) instead of the observed Spark type —
     needed for golden parity with examples/*/csv_crawler_agent_output.json.
     """
-    rows = [
-        (
-            f.name,
-            infer_type_from_name(f.name) if use_name_heuristic else f.dataType.simpleString(),
-            True if use_name_heuristic else f.nullable,
-            i,
-        )
+    return [
+        {
+            "name": f.name,
+            "dtype": infer_type_from_name(f.name) if use_name_heuristic else f.dataType.simpleString(),
+            "nullable": True if use_name_heuristic else f.nullable,
+            "ordinal": i,
+        }
         for i, f in enumerate(schema.fields)
     ]
-    return spark.createDataFrame(rows, FIELD_SCHEMA)
+
+
+def fields_from_schema(
+    spark: SparkSession,
+    schema: T.StructType,
+    use_name_heuristic: bool = False,
+) -> DataFrame:
+    """StructType → fields DataFrame (name, dtype, nullable, ordinal);
+    the rows of field_list."""
+    return spark.createDataFrame(field_list(schema, use_name_heuristic), FIELD_SCHEMA)
 
 
 DEFAULT_HEADER_MAX_BYTES = 32 * 1024  # csv_crawler_agent.py:8 DEFAULT_MAX_BYTES
@@ -108,36 +110,29 @@ def read_csv_header_bounded(
     return []
 
 
-def fields_from_headers(spark: SparkSession, headers: Sequence[str]) -> DataFrame:
-    """Header names → snapshot fields, exactly the crawler's projection
+def header_fields(headers: Sequence[str]) -> list[dict[str, Any]]:
+    """Header names → FieldMeta dicts, exactly the crawler's projection
     (csv_crawler_agent.py:270-291): nullable=True, ordinal=i,
     name-heuristic type."""
-    rows = [(h.strip(), infer_type_from_name(h.strip()), True, i) for i, h in enumerate(headers)]
-    return spark.createDataFrame(rows, FIELD_SCHEMA)
+    return [
+        {"name": h.strip(), "dtype": infer_type_from_name(h.strip()), "nullable": True, "ordinal": i}
+        for i, h in enumerate(headers)
+    ]
 
 
-def ensure_metadata_only(df: DataFrame, allowed_value_cols: Sequence[str] = ("min_val", "max_val")) -> None:
+def fields_from_headers(spark: SparkSession, headers: Sequence[str]) -> DataFrame:
+    """Header names → snapshot fields DataFrame; the rows of header_fields."""
+    return spark.createDataFrame(header_fields(headers), FIELD_SCHEMA)
+
+
+def ensure_metadata_only(columns: Iterable[str]) -> None:
     """R10 analog: refuse to persist anything that looks like raw data.
 
-    Our profiles contain only aggregates; the guard rejects forbidden
-    column names outright (same key set as the reference's recursive
-    scan) so a future refactor can't silently start persisting rows.
+    Snapshots hold only field metadata; the guard rejects forbidden
+    column or key names outright (same key set as the reference's
+    recursive scan) so a future refactor can't silently start
+    persisting rows.
     """
-    bad = {c for c in df.columns if c.lower() in FORBIDDEN_KEYS}
+    bad = {c for c in columns if c.lower() in FORBIDDEN_KEYS}
     if bad:
         raise ValueError(f"snapshot store must be metadata-only; forbidden columns: {sorted(bad)}")
-
-
-def latest_snapshot_per_entity(snapshots: DataFrame) -> DataFrame:
-    """R11: most recent snapshot per entity — top-1 window.
-
-    Physical note: snapshots is a small metadata table; the window
-    shuffle is negligible. At extreme entity counts this stays a single
-    hash-partitioned exchange on entity.
-    """
-    w = Window.partitionBy("entity").orderBy(F.col("timestamp").desc())
-    return (
-        snapshots.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

@@ -13,7 +13,10 @@ Scale shape of one run over a 10^12-doc table:
   - ONE scan of the batch's partitions feeds the profile aggregation
     (single shuffle) and constraint checks; partition pruning comes from
     the `partition_id` filter pushed to the source.
-  - Snapshot/diff/policy work on metadata-scale tables.
+  - The snapshot store, schema diff, manifest and policy handle tens of
+    rows; they run on the driver over small JSON records under out_dir
+    and start no Spark job. A retry of a committed run over file-backed
+    input starts none at all.
   - The manifest commit per batch bounds re-work after failure to one
     batch of partitions.
 """
@@ -28,16 +31,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import constraints as C
-from ..operators.diff import diff_fields, drift_report
+from ..operators.diff import diff_field_lists
 from ..operators.profile import (
     numeric_histogram,
     profile_columns,
     profile_spans,
     tdigest_profiles,
 )
-from ..operators.snapshot import fields_from_schema
+from ..operators.snapshot import field_list
+from ..sources.io import input_fingerprint
 from . import manifest as M
-from . import policy, store
+from . import policy, records, store
 
 DEFAULT_SPEC: dict[str, Any] = {
     "uniqueness": {"key": "doc_id", "salt_buckets": 16},
@@ -85,6 +89,25 @@ def baseline_kind_counts(docs: DataFrame) -> DataFrame:
     )
 
 
+def _check_layout(spark: SparkSession, out_dir: str) -> None:
+    """Fail loud on an out_dir written by an older layout of this engine
+    instead of mixing layouts, which leaves the directory unreadable or
+    the resume state invisible. There is no reader for the old layouts:
+    move the directory aside or point out_dir at a fresh location."""
+    legacy = (
+        ("profiles/snapshot_id=*", "profiles in the pre-run_id partition layout (snapshot_id=...)"),
+        ("store/snapshot{s,_fields}", "a parquet snapshot store (now one JSON record per snapshot)"),
+        ("manifest/*.parquet", "a parquet manifest (now JSON commit records per run)"),
+    )
+    for pattern, what in legacy:
+        if records.glob(spark, f"{out_dir}/{pattern}"):
+            raise RuntimeError(
+                f"{out_dir} holds {what}; move it aside or point out_dir at a "
+                f"fresh location — this engine reads only the layout of "
+                f"FIXTURES.md F5"
+            )
+
+
 def run_validation(
     spark: SparkSession,
     docs: DataFrame,
@@ -103,7 +126,14 @@ def run_validation(
 ) -> dict[str, Any]:
     """Validate one epoch of the documents table. Returns the decision
     envelope plus run bookkeeping. Re-invoking with the same run_id
-    resumes at partition granularity."""
+    resumes at partition granularity.
+
+    When ``docs`` reads files (parquet, Iceberg), the run's first commit
+    records an input fingerprint and the partition universe: a resume
+    over rewritten input raises, and a matching resume skips the
+    ``partition_id`` scan. Input with no files (in-memory or generated
+    frames) records no fingerprint; each call rescans its partition ids
+    and resumes unchecked."""
     run_id = run_id or str(uuid.uuid4())
     # per-SECTION merge: a partial override like
     # {'distribution_drift': {'ks_threshold': 0.2}} inherits the rest of
@@ -116,90 +146,42 @@ def run_validation(
         for k, v in {**DEFAULT_SPEC, **(spec or {})}.items()
     }
 
-    # ---- schema snapshot + drift detection (metadata-scale) ------------
-    # chain resolution is ONE collect of the tiny snapshots meta table
-    # (r4 verdict #1: the old get_or_create + previous_snapshot pair
-    # cost two parquet reads + three collect jobs of serial driver
-    # latency); the persist + before-fields read + diff then run on a
-    # BACKGROUND thread, overlapped with the batch body's scans — they
-    # share no lineage with the batch work, and SparkSession job
-    # submission is thread-safe (same pattern as the concurrent output
-    # writes below). The future is joined before the first manifest
-    # commit, preserving write-ahead ordering: the snapshot row is
-    # durable before any externally-visible commit references its id.
-    fields = fields_from_schema(spark, docs.schema)
+    _check_layout(spark, out_dir)
+
+    # ---- schema snapshot + drift detection (driver-side records) --------
+    # write-ahead order: the snapshot record is durable before any
+    # snapshot_id-keyed output (profile dirs) and before any commit; a
+    # crash later leaves a record the resumed run finds and reuses, so
+    # its output dirs keep one snapshot_id
+    store_dir = f"{out_dir}/store"
+    fields = field_list(docs.schema)
     snapshot_id, prev_id, needs_persist = store.resolve_snapshot_chain(
-        spark, f"{out_dir}/store", entity, epoch, run_id
+        spark, store_dir, entity, epoch, run_id
     )
-
-    def _persist_phase():
-        if needs_persist:
-            store.persist_snapshot(
-                spark,
-                f"{out_dir}/store",
-                entity,
-                epoch,
-                fields,
-                source_path=run_id,
-                snapshot_id=snapshot_id,
-            )
-
-    def _report_phase():
-        if prev_id:
-            before = store.fields_of(spark, f"{out_dir}/store", prev_id)
-        else:
-            before = spark.createDataFrame([], fields.schema)  # first snapshot → all adds
-        report_row = drift_report(diff_fields(before, fields)).first()
-        return {
-            "request_id": run_id,
-            "drift_detected": report_row.drift_detected,
-            "drift_report": {
-                "changes": [c.asDict(recursive=True) for c in report_row.changes],
-                "summary": report_row.summary,
-                "severity": report_row.severity,
-            },
-            "detected_by": "schema_drift_detector_spark",
-        }
-
-    # layout guard (once, before any batch work or persists): profiles
-    # moved from [snapshot_id, partition_id] to [run_id, snapshot_id,
-    # partition_id]; writing the new layout into a directory holding the
-    # old one would leave EVERY read failing with 'Conflicting directory
-    # structures'. Fail loud with a migration hint instead. (Local-path
-    # check — remote stores predate the old layout in this engine's
-    # history.)
-    import os as _os
-
-    _prof_dir = f"{out_dir}/profiles"
-    if _os.path.isdir(_prof_dir) and any(
-        d.startswith("snapshot_id=") for d in _os.listdir(_prof_dir)
-    ):
-        raise RuntimeError(
-            f"{_prof_dir} uses the pre-run_id partition layout "
-            f"(snapshot_id=...); move it aside or point out_dir at a fresh "
-            f"location — mixing layouts makes the directory unreadable"
+    if needs_persist:
+        store.persist_snapshot(
+            spark, store_dir, entity, epoch, fields, source_path=run_id, snapshot_id=snapshot_id
         )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    # two independent background futures, joined at different barriers:
-    #   persist_future — the snapshot store rows; MUST be durable before
-    #     the first batch OUTPUT WRITE lands, because profile output dirs
-    #     are keyed by snapshot_id: a crash after a profile write but
-    #     before the snapshot row would make resume mint a fresh uuid and
-    #     orphan the old dirs forever (review r5 #1) — the write-ahead
-    #     invariant is snapshot-before-any-output, not just before-commit.
-    #   report_future — before-fields read + diff + drift report; only
-    #     the envelope/policy needs it, so it overlaps the whole batch
-    #     body and joins at the first manifest commit.
-    # The overlap window for the persist is the partition plan below
-    # (universe distinct — a full scan — and the manifest read).
-    _meta_pool = ThreadPoolExecutor(max_workers=2)
-    persist_future = _meta_pool.submit(_persist_phase)
-    meta_future = _meta_pool.submit(_report_phase)
+    before = store.fields_of(spark, store_dir, prev_id) if prev_id else []  # first snapshot → all adds
+    report = diff_field_lists(before, fields)
+    schema_report = {
+        "request_id": run_id,
+        "drift_detected": report["drift_detected"],
+        "drift_report": {k: report[k] for k in ("changes", "summary", "severity")},
+        "detected_by": "schema_drift_detector_spark",
+    }
 
     # ---- partition plan with resume ------------------------------------
-    universe = docs.select("partition_id").distinct()
+    # a run over file-backed input records its input fingerprint and
+    # partition universe with its first commit; a resume checks the
+    # fingerprint and reuses the universe instead of scanning for it
+    fingerprint = input_fingerprint(docs)
+    universe = M.resume_universe(spark, out_dir, run_id, fingerprint)
+    run_input = None
+    if universe is None:
+        universe = sorted(r.partition_id for r in docs.select("partition_id").distinct().collect())
+        if fingerprint is not None:
+            run_input = {"fingerprint": fingerprint, "universe": universe}
     pending = M.pending_partitions(spark, universe, out_dir, run_id)
     batches = [
         pending[i :: partition_batches] for i in range(partition_batches)
@@ -263,13 +245,10 @@ def run_validation(
     # rewrites the same (run_id, partition_id) dirs). Metadata-scale
     # collects: one row per baseline partition id.
     def _vanished(baseline: DataFrame | None) -> list[int]:
-        if baseline is None:
+        if baseline is None or not batches:
             return []
-        gone = (
-            baseline.select("partition_id").distinct()
-            .join(universe, "partition_id", "left_anti")
-        )
-        return [int(r.partition_id) for r in gone.collect()]
+        ids = {int(r.partition_id) for r in baseline.select("partition_id").distinct().collect()}
+        return sorted(ids - set(universe))
 
     vanished_hist = _vanished(baseline_hist)
     vanished_kinds = _vanished(baseline_kinds)
@@ -365,12 +344,9 @@ def run_validation(
             from concurrent.futures import ThreadPoolExecutor
 
             targets = [
-                # run_id leads the partition key: snapshot_id is deduplicated
-                # by schema (get_or_create_snapshot), so two runs over the
-                # same schema share a snapshot_id — without run_id in the
-                # layout, a later run's dynamic overwrite would destroy the
-                # earlier run's profile history. With it, only a same-run
-                # resume overwrites in place.
+                # run_id leads the partition key, so a run's dynamic
+                # overwrite touches only its own dirs: only a same-run
+                # resume overwrites in place, never another run's history.
                 (
                     profiles.withColumn("run_id", F.lit(run_id)),
                     f"{out_dir}/profiles",
@@ -384,9 +360,6 @@ def run_validation(
                 (verdicts, f"{out_dir}/verdicts", ["run_id", "partition_id"]),
                 (violations, f"{out_dir}/violations", ["run_id", "partition_id"]),
             ]
-            # snapshot rows durable BEFORE any snapshot_id-keyed output
-            # dir exists (write-ahead: see the futures comment above)
-            persist_future.result()
             prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             write_ok = False
@@ -441,11 +414,6 @@ def run_validation(
                 }
             finally:
                 profiles.unpersist()
-            # join the report phase before the FIRST commit: a failed
-            # diff must abort the run before any manifest row promises
-            # the batch exists (the snapshot-durability barrier is the
-            # persist_future join above, before the writes)
-            meta_future.result()
             M.commit_partitions(
                 spark,
                 out_dir,
@@ -465,16 +433,14 @@ def run_validation(
                     }
                     for p in batch
                 ],
+                run_input=run_input if executed == 0 else None,
             )
             executed += 1
     finally:
         if dups is not None:
             dups.unpersist()
-        _meta_pool.shutdown(wait=True)
 
     # ---- policy: heal → notify → decide (driver-side, tiny) ------------
-    persist_future.result()  # zero-batch runs: durable before the envelope
-    schema_report = meta_future.result()
     pol = spec.get("policy", {})
     heal = policy.healing_plan(
         schema_report["drift_detected"],

@@ -1,29 +1,31 @@
-"""Snapshot store: immutable append of snapshot metadata + fields +
-profiles, with the PREVIOUS_SNAPSHOT chain materialized by window
-functions (reference: snapshot_persistence_agent.py:154-273,
+"""Snapshot store: one immutable JSON record per snapshot under
+``<out_dir>/store/`` (reference: snapshot_persistence_agent.py:154-273,
 infra/neo4j/init_schema.cypher:16-32).
 
-Layout (parquet fallback; Iceberg identifiers work identically through
-sources.io.write_table):
-    <store>/snapshots         one row per snapshot (entity, epoch, ts, id)
-    <store>/snapshot_fields   FieldMeta rows keyed by snapshot_id
-    <store>/profiles          per-partition column profiles
-All tables are metadata-scale — tiny next to the data table.
+Layout (FIXTURES.md F5):
+    <store>/<snapshot_id>.json   snapshot_id, entity, epoch, timestamp,
+                                 created_by, source_path and the
+                                 snapshot's FieldMeta list
+The identity and the fields land in one write, so a snapshot is either
+wholly discoverable or absent. The PREVIOUS_SNAPSHOT chain is resolved
+per call on the driver: the most recent other snapshot of the entity.
+Records are read and written through plans/records.py — no Spark job.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
+from typing import Any, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..model import SNAPSHOT_SCHEMA
-from ..operators.snapshot import (
-    ensure_metadata_only,
-    latest_snapshot_per_entity,
-    new_snapshot_id,
-)
+from ..model import FIELD_SCHEMA
+from ..operators.snapshot import ensure_metadata_only, new_snapshot_id
+from . import records
+
+
+def _name(snapshot_id: str) -> str:
+    return f"{snapshot_id}{records.SUFFIX}"
 
 
 def persist_snapshot(
@@ -31,74 +33,45 @@ def persist_snapshot(
     store_dir: str,
     entity: str,
     epoch: int,
-    fields: DataFrame,
-    profiles: DataFrame | None = None,
+    fields: Sequence[dict[str, Any]],
     created_by: str = "schema_drift_detector_spark",
     source_path: str | None = None,
     snapshot_id: str | None = None,
 ) -> str:
-    """Append an immutable snapshot; returns its uuid
+    """Write an immutable snapshot record; returns its uuid
     (≙ snapshot_persistence_agent.py:116 identity semantics).
-    ``snapshot_id`` lets a caller that minted the id up front (see
-    resolve_snapshot_chain) persist under it; default mints a fresh
-    uuid."""
+    ``fields``: FieldMeta dicts (name, dtype, nullable, ordinal) in
+    list order. ``snapshot_id`` lets a caller that minted the id up
+    front (see resolve_snapshot_chain) persist under it; default mints
+    a fresh uuid."""
     snapshot_id = snapshot_id or new_snapshot_id()
-    # write-ahead ordering: fields/profiles land FIRST, the snapshot
-    # meta row LAST — the meta row is the commit point every reader
-    # discovers snapshots through (previous_snapshot, get_or_create).
-    # A crash mid-persist then leaves only unreferenced field rows,
-    # never a discoverable-but-empty snapshot that would poison the
-    # diff chain permanently (same discipline as plans/manifest.py).
-    f = fields.withColumn("snapshot_id", F.lit(snapshot_id)).withColumn("entity", F.lit(entity))
-    ensure_metadata_only(f)
-    f.write.mode("append").parquet(f"{store_dir}/snapshot_fields")
-    if profiles is not None:
-        ensure_metadata_only(profiles)
-        profiles.withColumn("snapshot_id", F.lit(snapshot_id)).withColumn(
-            "entity", F.lit(entity)
-        ).write.mode("append").parquet(f"{store_dir}/profiles")
-    meta = spark.createDataFrame(
-        [
-            (
-                snapshot_id,
-                entity,
-                int(epoch),
-                datetime.now(timezone.utc),
-                created_by,
-                source_path,
-            )
-        ],
-        SNAPSHOT_SCHEMA,
-    )
-    meta.coalesce(1).write.mode("append").parquet(f"{store_dir}/snapshots")
+    ensure_metadata_only({k for f in fields for k in f})
+    record = {
+        "snapshot_id": snapshot_id,
+        "entity": entity,
+        "epoch": int(epoch),
+        # fixed-width UTC ISO 8601, so string order is time order
+        "timestamp": datetime.now(timezone.utc).isoformat(timespec="microseconds"),
+        "created_by": created_by,
+        "source_path": source_path,
+        "fields": [{k: f.get(k) for k in FIELD_SCHEMA.fieldNames()} for f in fields],
+    }
+    records.write_record(spark, store_dir, _name(snapshot_id), record)
     return snapshot_id
 
 
-def get_or_create_snapshot(
-    spark: SparkSession,
-    store_dir: str,
-    entity: str,
-    epoch: int,
-    fields: DataFrame,
-    run_id: str,
-) -> str:
-    """Idempotent snapshot for a run: a resumed run reuses the snapshot
-    it already persisted (keyed by source_path == run_id) instead of
-    appending a duplicate — keeps the PREVIOUS_SNAPSHOT chain and the
-    drift report stable across interruptions."""
-    existing = (
-        read_snapshots(spark, store_dir)
-        .filter(
-            (F.col("entity") == entity)
-            & (F.col("epoch") == int(epoch))
-            & (F.col("source_path") == run_id)
-        )
-        .limit(1)
-        .collect()
-    )
-    if existing:
-        return existing[0].snapshot_id
-    return persist_snapshot(spark, store_dir, entity, epoch, fields, source_path=run_id)
+def read_snapshots(spark: SparkSession, store_dir: str) -> list[dict[str, Any]]:
+    """Every snapshot record of the store; [] before the first persist."""
+    return records.read_records(spark, store_dir)
+
+
+def _latest_other(snaps: list[dict[str, Any]], entity: str, snapshot_id: str) -> str | None:
+    """R11: the entity's most recent snapshot other than ``snapshot_id``
+    (timestamp desc, snapshot_id as a deterministic tie-break)."""
+    others = [s for s in snaps if s["entity"] == entity and s["snapshot_id"] != snapshot_id]
+    if not others:
+        return None
+    return max(others, key=lambda s: (s["timestamp"], s["snapshot_id"]))["snapshot_id"]
 
 
 def resolve_snapshot_chain(
@@ -108,68 +81,35 @@ def resolve_snapshot_chain(
     epoch: int,
     run_id: str,
 ) -> tuple[str, str | None, bool]:
-    """Resolve (snapshot_id, previous_snapshot_id, needs_persist) with
-    ONE collect of the (tiny) snapshots meta table, instead of the
-    get_or_create + previous_snapshot pair's two separate parquet
-    reads + three collect jobs. The meta table is metadata-scale by
-    construction (one row per snapshot), so driver-side resolution is
-    the right altitude — each avoided Spark job is ~0.5-1 s of serial
-    driver latency that Amdahls short runs (BENCH/BASELINE.md phase
-    decomposition; r4 verdict #1).
+    """Resolve (snapshot_id, previous_snapshot_id, needs_persist) from
+    one read of the store.
 
-    Matches get_or_create_snapshot (reuse iff a snapshot with this
-    entity/epoch/source_path==run_id exists) and previous_snapshot
-    (most recent OTHER snapshot for the entity; timestamp desc,
-    snapshot_id as a deterministic tie-break). When ``needs_persist``
-    is True the caller owns writing the snapshot via
-    persist_snapshot(..., snapshot_id=...) — and must do so before
-    anything downstream becomes externally visible (manifest commit),
-    preserving the write-ahead chain discipline.
+    A run reuses the snapshot it already persisted (entity, epoch and
+    source_path == run_id match), so a resumed run keeps its snapshot
+    id and the chain stays stable across interruptions. When
+    ``needs_persist`` is True the caller owns writing the snapshot via
+    persist_snapshot(..., snapshot_id=...) — and must do so before any
+    snapshot_id-keyed output becomes visible (write-ahead).
     """
-    rows = read_snapshots(spark, store_dir).filter(F.col("entity") == entity).collect()
-    existing = [
-        r
-        for r in rows
-        if r.epoch == int(epoch) and r.source_path == run_id
-    ]
-    if existing:
-        snapshot_id, created = existing[0].snapshot_id, False
-    else:
-        snapshot_id, created = new_snapshot_id(), True
-    others = sorted(
-        (r for r in rows if r.snapshot_id != snapshot_id),
-        key=lambda r: (r.timestamp, r.snapshot_id),
-        reverse=True,
+    snaps = read_snapshots(spark, store_dir)
+    existing = next(
+        (
+            s
+            for s in snaps
+            if s["entity"] == entity and s["epoch"] == int(epoch) and s["source_path"] == run_id
+        ),
+        None,
     )
-    prev_id = others[0].snapshot_id if others else None
-    return snapshot_id, prev_id, created
-
-
-def read_snapshots(spark: SparkSession, store_dir: str) -> DataFrame:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{store_dir}/snapshots")
-    except AnalysisException:
-        # store not initialized yet; transient IO/corruption errors must
-        # propagate — treating them as "no snapshots" would both produce
-        # a false first-snapshot all-adds diff and append a duplicate
-        # snapshot row
-        return spark.createDataFrame([], SNAPSHOT_SCHEMA)
+    snapshot_id = existing["snapshot_id"] if existing else new_snapshot_id()
+    return snapshot_id, _latest_other(snaps, entity, snapshot_id), existing is None
 
 
 def previous_snapshot(spark: SparkSession, store_dir: str, entity: str, before_id: str) -> str | None:
     """Most recent snapshot for entity other than ``before_id`` (R11)."""
-    snaps = read_snapshots(spark, store_dir).filter(
-        (F.col("entity") == entity) & (F.col("snapshot_id") != before_id)
-    )
-    latest = latest_snapshot_per_entity(snaps).collect()
-    return latest[0].snapshot_id if latest else None
+    return _latest_other(read_snapshots(spark, store_dir), entity, before_id)
 
 
-def fields_of(spark: SparkSession, store_dir: str, snapshot_id: str) -> DataFrame:
-    return (
-        spark.read.parquet(f"{store_dir}/snapshot_fields")
-        .filter(F.col("snapshot_id") == snapshot_id)
-        .select("name", "dtype", "nullable", "ordinal")
-    )
+def fields_of(spark: SparkSession, store_dir: str, snapshot_id: str) -> list[dict[str, Any]]:
+    """The snapshot's FieldMeta dicts, in the list order they were
+    persisted in."""
+    return records.read_record(spark, store_dir, _name(snapshot_id))["fields"]

@@ -92,3 +92,57 @@ def write_bucketed(
     if sort:
         w = w.sortBy(key)
     w.saveAsTable(table)
+
+
+def input_fingerprint(df: DataFrame) -> str | None:
+    """A hash of what ``df`` reads, to tell a resumed run whether its
+    input was rewritten since the run started.
+
+    It covers the canonical logical plan (filters and projections over
+    the tables) and, per scanned table, either the file listing Spark
+    already holds (path, size, modification time of every file) or an
+    Iceberg table's current snapshot id. Returns None when any leaf of
+    the plan is not a file or Iceberg scan — in-memory rows, generated
+    ranges, RDDs: such input has nothing to fingerprint.
+    """
+    import hashlib
+    import json
+
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    sources = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation" and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation":
+            sources.append(_file_listing(spark, leaf.relation().location()))
+        elif kind == "DataSourceV2Relation" and leaf.table().getClass().getName() == (
+            "org.apache.iceberg.spark.source.SparkTable"
+        ):
+            snap = leaf.table().table().currentSnapshot()
+            sources.append([leaf.table().name(), None if snap is None else snap.snapshotId()])
+        else:
+            return None
+    payload = json.dumps([plan.canonicalized().treeString(), sources])
+    return hashlib.sha256(payload.encode("utf-8")).hexdigest()
+
+
+def _file_listing(spark: SparkSession, location) -> list:
+    """Sorted (path, size, mtime) of a file index's files. A
+    PartitioningAwareFileIndex (every path-based read) already holds the
+    listing; any other index costs one status call per file."""
+    jvm = spark._jvm
+    held = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex"
+    ).isInstance(location)
+    if held:
+        seq = location.allFiles()
+        statuses = [seq.apply(i) for i in range(seq.size())]
+    else:
+        conf = spark._jsc.hadoopConfiguration()
+        statuses = []
+        for f in location.inputFiles():
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            statuses.append(path.getFileSystem(conf).getFileStatus(path))
+    return sorted((s.getPath().toString(), s.getLen(), s.getModificationTime()) for s in statuses)

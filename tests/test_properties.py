@@ -189,9 +189,13 @@ def _reference_fallback_diff(before: list[dict], after: list[dict]):
 def test_diff_matches_reference_fallback_semantics(spark, data):
     """Property: for random field lists (shared names, case collisions,
     null dtypes, random nullability/ordinals), diff_fields + drift_report
-    reproduce the reference _fallback_diff verbatim — changes multiset,
-    summary string, and overall severity."""
-    from schema_drift_detector_spark.operators.diff import diff_fields, drift_report
+    and diff_field_lists each reproduce the reference _fallback_diff
+    verbatim — changes multiset, summary string, and overall severity."""
+    from schema_drift_detector_spark.operators.diff import (
+        diff_field_lists,
+        diff_fields,
+        drift_report,
+    )
 
     names = st.sampled_from(["a", "B", "b", "cc", "Dd", "dd", "e1"])
     dtypes = st.sampled_from(["int", "string", "Date", None])
@@ -217,6 +221,16 @@ def test_diff_matches_reference_fallback_semantics(spark, data):
     assert got == ref_changes, f"changes mismatch\n got={got}\n ref={ref_changes}"
     assert rep.summary == ref_summary
     assert rep.severity == ref_overall
+
+    to_dicts = lambda rows: [dict(name=n, dtype=t, nullable=nu, ordinal=o) for n, t, nu, o in rows]  # noqa: E731
+    py = diff_field_lists(to_dicts(bf), to_dicts(af))
+    py_got = [(c["op"], c["field"], c["severity"], c["notes"]) for c in py["changes"]]
+    assert py_got == ref_changes, f"changes mismatch\n got={py_got}\n ref={ref_changes}"
+    assert py["summary"] == ref_summary
+    assert py["severity"] == ref_overall
+    assert py["drift_detected"] is bool(ref_changes)
+    # same change payloads as the DataFrame diff
+    assert py["changes"] == [c.asDict(recursive=True) for c in rep.changes]
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

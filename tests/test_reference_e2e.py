@@ -7,8 +7,8 @@ from __future__ import annotations
 
 import pytest
 
-from schema_drift_detector_spark.operators.diff import diff_fields, drift_report
-from schema_drift_detector_spark.operators.snapshot import fields_from_headers
+from schema_drift_detector_spark.operators.diff import diff_field_lists
+from schema_drift_detector_spark.operators.snapshot import header_fields
 from schema_drift_detector_spark.plans import store
 from schema_drift_detector_spark.plans.policy import decide, healing_plan, notification
 
@@ -30,45 +30,42 @@ def test_csv_drift_scenario(spark, tmp_path_factory):
 
     # day 1: v1 lands → first snapshot
     h1 = _csv_headers(spark, tmp, V1, "people-info-v1.csv")
-    f1 = fields_from_headers(spark, h1)
+    f1 = header_fields(h1)
     s1 = store.persist_snapshot(spark, store_dir, "people-info.csv", 0, f1)
 
     # day 2: v2 lands (adds country) → diff vs previous
     h2 = _csv_headers(spark, tmp, V2, "people-info-v2.csv")
-    f2 = fields_from_headers(spark, h2)
+    f2 = header_fields(h2)
     s2 = store.persist_snapshot(spark, store_dir, "people-info.csv", 1, f2)
     prev = store.previous_snapshot(spark, store_dir, "people-info.csv", s2)
     assert prev == s1
 
     before = store.fields_of(spark, store_dir, prev)
-    rep = drift_report(diff_fields(before, f2)).collect()[0]
+    rep = diff_field_lists(before, f2)
     # golden: examples/drift/detector_agent_output.json
-    assert rep.drift_detected is True
-    assert rep.summary == "add country (low)"
-    assert rep.severity == "info"
-    change = rep.changes[0]
+    assert rep["drift_detected"] is True
+    assert rep["summary"] == "add country (low)"
+    assert rep["severity"] == "info"
+    change = rep["changes"][0]
     assert change["op"] == "add" and change["field"] == "country"
     assert change["after"]["dtype"] == "string" and change["after"]["ordinal"] == 5
 
     # healing + notification + decision (healer_agent.py golden strings)
-    changes = [c.asDict(recursive=True) if hasattr(c, "asDict") else c for c in rep.changes]
-    heal = healing_plan(True, changes, request_id="e2e")
+    heal = healing_plan(True, rep["changes"], request_id="e2e")
     assert heal["healing"]["recommended_actions"][0]["script"] == (
         "ALTER TABLE {table_name} ADD COLUMN country string;"
     )
     assert heal["healing"]["next_steps"] == "auto_heal"
-    notif = notification(True, True, rep.severity, rep.summary, ["email"])
+    notif = notification(True, True, rep["severity"], rep["summary"], ["email"])
     assert notif["sent"] is True
-    assert decide(True, rep.severity, heal, auto_heal_policy=True) == "auto_heal"
+    assert decide(True, rep["severity"], heal, auto_heal_policy=True) == "auto_heal"
 
     # day 3: v2 lands again → no drift → continue
     s3 = store.persist_snapshot(spark, store_dir, "people-info.csv", 2, f2)
     prev3 = store.previous_snapshot(spark, store_dir, "people-info.csv", s3)
-    rep3 = drift_report(
-        diff_fields(store.fields_of(spark, store_dir, prev3), f2)
-    ).collect()[0]
-    assert rep3.drift_detected is False
-    assert rep3.summary == "no schema drift detected"
+    rep3 = diff_field_lists(store.fields_of(spark, store_dir, prev3), f2)
+    assert rep3["drift_detected"] is False
+    assert rep3["summary"] == "no schema drift detected"
     assert decide(False, "info", healing_plan(False, []), True) == "continue"
 
 
@@ -96,27 +93,27 @@ def test_golden_csv_files_end_to_end(spark, tmp_path_factory):
     reports = {}
     for i, scenario in enumerate(("no_drfit", "drift")):
         headers = read_csv_header_bounded(spark, f"{ex}/{scenario}/people-info.csv")
-        fields = fields_from_headers(spark, headers)
-        got = [r.asDict() for r in fields.orderBy("ordinal").collect()]
+        fields = header_fields(headers)
+        sid = store.persist_snapshot(spark, store_dir, "people-info.csv", i, fields)
+        got = store.fields_of(spark, store_dir, sid)  # the stored record
         want = golden_fields(scenario)
         assert [g["name"] for g in got] == [w["name"] for w in want]
         assert [g["dtype"] for g in got] == [w["type"] for w in want]
         assert [g["nullable"] for g in got] == [w["nullable"] for w in want]
         assert [g["ordinal"] for g in got] == [w["ordinal"] for w in want]
-        sid = store.persist_snapshot(spark, store_dir, "people-info.csv", i, fields)
         prev = store.previous_snapshot(spark, store_dir, "people-info.csv", sid)
         if prev:
             before = store.fields_of(spark, store_dir, prev)
-            reports[scenario] = drift_report(diff_fields(before, fields)).collect()[0]
+            reports[scenario] = diff_field_lists(before, fields)
 
     # golden: examples/drift/detector_agent_output.json (drift_report node)
     with open(f"{ex}/drift/detector_agent_output.json") as f:
         want_rep = json.load(f)["drift_report"]
     rep = reports["drift"]
-    assert rep.drift_detected is True
-    assert rep.summary == want_rep["summary"]
-    assert rep.severity == want_rep["severity"]
-    got_changes = [c.asDict(recursive=True) for c in rep.changes]
+    assert rep["drift_detected"] is True
+    assert rep["summary"] == want_rep["summary"]
+    assert rep["severity"] == want_rep["severity"]
+    got_changes = rep["changes"]
     assert len(got_changes) == len(want_rep["changes"]) == 1
     g, w = got_changes[0], want_rep["changes"][0]
     assert g["op"] == w["op"] and g["field"] == w["field"]

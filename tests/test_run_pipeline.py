@@ -3,6 +3,8 @@ violations, manifest resume idempotence, policy decisions."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -119,7 +121,7 @@ def test_resume_idempotent(spark, docs0, catalog, tmp_path_factory):
     # resume reused the interrupted run's snapshot (no duplicate chain)
     from schema_drift_detector_spark.plans.store import read_snapshots
 
-    snaps = read_snapshots(spark, f"{out}/store").filter("source_path = 'rr'").count()
+    snaps = sum(s["source_path"] == "rr" for s in read_snapshots(spark, f"{out}/store"))
     assert snaps == 1
 
 
@@ -396,16 +398,84 @@ def test_snapshot_durable_before_outputs_and_resume_reuses_id(
     import os
     assert os.path.isdir(f"{out}/profiles")
     # ...and the snapshot row is ALREADY durable
-    snaps = store.read_snapshots(spark, f"{out}/store").collect()
+    snaps = store.read_snapshots(spark, f"{out}/store")
     assert len(snaps) == 1
-    sid = snaps[0].snapshot_id
+    sid = snaps[0]["snapshot_id"]
     # resume reuses that id: no second snapshot row, and every profile
     # dir on disk is keyed by the one snapshot_id
     run_validation(
         spark, docs0, catalog, out, run_id="wa", epoch=0, partition_batches=4
     )
-    snaps2 = store.read_snapshots(spark, f"{out}/store").collect()
-    assert [s.snapshot_id for s in snaps2] == [sid]
+    snaps2 = store.read_snapshots(spark, f"{out}/store")
+    assert [s["snapshot_id"] for s in snaps2] == [sid]
     run_dir = f"{out}/profiles/run_id=wa"
     sid_dirs = {d for d in os.listdir(run_dir) if d.startswith("snapshot_id=")}
     assert sid_dirs == {f"snapshot_id={sid}"}
+
+
+def _parquet_docs(spark, docs0, path):
+    """docs0 as a parquet table partitioned on partition_id, read back."""
+    docs0.write.partitionBy("partition_id").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_committed_retry_over_parquet_runs_no_spark_job(spark, docs0, catalog, tmp_path):
+    """A retry of a fully committed run over file-backed input touches
+    only driver-side records: the snapshot store, the schema diff and
+    the commit log (with the universe recorded at the first commit)."""
+    docs = _parquet_docs(spark, docs0, str(tmp_path / "docs"))
+    out = str(tmp_path / "out")
+    first = run_validation(spark, docs, catalog, out, run_id="zj", epoch=0)
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        sc.listenerBus().waitUntilEmpty(60_000)
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    retry = run_validation(spark, docs, catalog, out, run_id="zj", epoch=0)
+    assert job_ids() - before == set()
+    assert retry["run"]["partitions_pending_before"] == []
+    assert retry["decision"] == first["decision"]
+    assert retry["details"]["drift"] == first["details"]["drift"]
+
+
+def test_resume_over_rewritten_input_is_refused(spark, docs0, catalog, tmp_path):
+    """The run's first commit records its input fingerprint; a resume
+    after one input partition was rewritten must fail naming the run
+    instead of mixing verdicts over two inputs."""
+    from schema_drift_detector_spark.sources.io import input_fingerprint
+
+    path = str(tmp_path / "docs")
+    docs = _parquet_docs(spark, docs0, path)
+    out = str(tmp_path / "out")
+    run_validation(
+        spark, docs, catalog, out, run_id="fp", epoch=0,
+        partition_batches=2, fail_after_batches=1,
+    )
+    assert M.pending_partitions(spark, docs.select("partition_id"), out, "fp") != []
+    # re-reading the unchanged table gives the same fingerprint
+    assert input_fingerprint(spark.read.parquet(path)) == input_fingerprint(docs)
+    assert input_fingerprint(docs0) is None  # generated rows: nothing to fingerprint
+
+    # rewrite partition 3 with one document fewer
+    part = f"{path}/partition_id=3"
+    kept = spark.read.parquet(part).limit(CFG.n_docs // 8 - 1).collect()
+    spark.createDataFrame(kept, spark.read.parquet(part).schema).write.mode("overwrite").parquet(part)
+    with pytest.raises(RuntimeError, match="run_id 'fp' cannot resume: its input changed"):
+        run_validation(
+            spark, spark.read.parquet(path), catalog, out, run_id="fp", epoch=0,
+            partition_batches=2,
+        )
+
+
+def test_legacy_parquet_store_or_manifest_fails_loudly(spark, docs0, catalog, tmp_path):
+    """An out_dir holding the old parquet manifest or snapshot store
+    fails before any work, with a migration hint — no second reader."""
+    for table in ("manifest", "store/snapshots"):
+        out = str(tmp_path / table.replace("/", "_"))
+        spark.range(1).write.parquet(f"{out}/{table}")
+        with pytest.raises(RuntimeError, match="move it aside"):
+            run_validation(spark, docs0, catalog, out, run_id="lg", epoch=0)
+        assert not os.path.exists(f"{out}/verdicts")
