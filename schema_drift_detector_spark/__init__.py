@@ -13,16 +13,15 @@ PySpark DataFrame API so Catalyst/Tungsten/AQE pick physical strategy.
 
 Layout:
   sources/    table IO seam (parquet/iceberg) + deterministic synthesizer
-  functions/  column-expression helpers (type inference, Bloom filter,
-              t-digest sketch)
+  functions/  column-expression helpers (type inference, Bloom filter)
   operators/  profile, snapshot, diff, constraints, skew
   plans/      run pipeline, snapshot store, checkpoint manifest, policy
 
 Corpus toolkit, not reached from plans.run and pending deletion (see
 tests/test_package_closure.py): functions/{text,pii,similarity,cms,
 normalize}, operators/{dedup,ann,quantize,multimodal,sampling,
-incremental,packing,substring,retrieval,cleaning,layout,resample,
-classify,quality_lm,reputation}, streaming/.
+incremental,packing,substring,cleaning,layout,resample,classify},
+streaming/.
 """
 
 __version__ = "0.1.0"

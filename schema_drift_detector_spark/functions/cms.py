@@ -1,5 +1,5 @@
 """Count-min sketch (Cormode & Muthukrishnan 2005) as a DataFrame —
-the frequency counterpart of the engine's HLL (distinct), t-digest
+the frequency counterpart of the engine's HLL (distinct), KLL
 (quantiles) and Bloom (membership) sketches.
 
 Spark-first design: the sketch IS a tiny DataFrame of at most

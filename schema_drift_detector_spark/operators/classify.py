@@ -10,8 +10,7 @@ replayable result — the property every certified operator here needs.
 
 Semantics (deterministic, cross-engine):
   - Tokens are the literal single-space split of ``text_col`` with ''
-    artifacts dropped (the engine-wide portable tokenization — the
-    same rule as operators.quality_lm).
+    artifacts dropped (the engine-wide portable tokenization).
   - Each token maps to one of ``n_buckets`` buckets via the engine's
     portable 60-bit hash (salt ':nb') — a hashed vocabulary, so the
     model is fixed-size regardless of corpus vocabulary.

@@ -11,6 +11,10 @@ detection (detector_agent.py) to data constraints:
                                  long-format histogram rows, so millions
                                  of (partition, column) pairs evaluate in
                                  one job; no driver-side loops)
+  - quantile drift              (KS statistic between per-partition KLL
+                                 sketches, read from a fixed rank grid
+                                 with Catalyst array functions)
+  - categorical drift           (chi-square between span-kind counts)
 
 Violation rows carry the span-sequence evidence columns
 (doc_id, kind, text, media_ref, span_order) required by the
@@ -24,8 +28,6 @@ partition; pass is 'info'.
 from __future__ import annotations
 
 from typing import Sequence
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -449,47 +451,58 @@ def check_categorical_drift(
     return _verdict(per, run_id, "categorical_drift")
 
 
+# KS between two KLL sketches is read off a fixed rank grid: each side's
+# quantiles at ranks (i + 0.5)/R stand in for its CDF to within 0.5/R,
+# on top of KLL's own rank error (~1.65% at Spark's default k = 200)
+_KS_GRID = 100
+
+
 def check_quantile_drift(
-    base_td: DataFrame,
-    curr_td: DataFrame,
+    base_kll: DataFrame,
+    curr_kll: DataFrame,
     run_id: str,
     epoch: int,
     keys: Sequence[str] = ("partition_id",),
     ks_threshold: float = 0.1,
 ) -> DataFrame:
-    """Distribution drift on t-digest sketches (profile.tdigest_profiles
-    output): per key group, KS distance between the baseline and current
-    digests. The join carries only sketch rows (metadata-scale); the KS
-    evaluation is an Arrow-batched pandas UDF over the ~2KB blobs."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions import sketch
-
-    @pandas_udf("double")
-    def ks(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                sketch.ks_statistic(bytes(x), bytes(y)) if x is not None and y is not None else None
-                for x, y in zip(a, b)
-            ]
-        )
-
+    """Distribution drift on KLL sketches (profile.kll_profiles output):
+    per key group, the KS distance between the baseline and current
+    sketches. Both CDFs are step functions over the _KS_GRID quantiles
+    of each side, so their largest gap lies at one of those 2·_KS_GRID
+    points; the sup is evaluated there with higher-order array functions.
+    The join carries only sketch rows and everything runs in Catalyst."""
     keys = list(keys)
-    b = base_td.select(*keys, F.col("tdigest").alias("td_base"), F.col("n").alias("n_base"))
-    c = curr_td.select(*keys, F.col("tdigest").alias("td_curr"), F.col("n").alias("n_curr"))
+    b = base_kll.select(*keys, F.col("kll").alias("kll_base"), F.col("n").alias("n_base"))
+    c = curr_kll.select(*keys, F.col("kll").alias("kll_curr"), F.col("n").alias("n_curr"))
     # full_outer + fail-closed, like the histogram/categorical checks: a
-    # key group with a baseline digest but no current one (vanished
-    # partition) — or vice versa — IS drift, not a skippable row
-    j = b.join(c, on=keys, how="full_outer").withColumn("ks_stat", ks("td_base", "td_curr"))
-    both = F.col("td_base").isNotNull() & F.col("td_curr").isNotNull()
-    per = j.select(
+    # key group with a baseline sketch but no current one (vanished
+    # partition), or vice versa, or one whose values are all null/NaN on
+    # one side IS drift, not a skippable row. The guard also gates the
+    # quantile extraction, which raises on an empty sketch
+    j = b.join(c, on=keys, how="full_outer").fillna(0, subset=["n_base", "n_curr"])
+    both = (F.col("n_base") > 0) & (F.col("n_curr") > 0)
+    ranks = F.array(*[F.lit((i + 0.5) / _KS_GRID) for i in range(_KS_GRID)])
+    q_base = F.when(both, F.kll_sketch_get_quantile_double("kll_base", ranks))
+    q_curr = F.when(both, F.kll_sketch_get_quantile_double("kll_curr", ranks))
+    j = j.select(*keys, "n_base", "n_curr", q_base.alias("q_base"), q_curr.alias("q_curr"))
+
+    def at_or_below(q: str, x):
+        return F.size(F.filter(F.col(q), lambda y: y <= x))
+
+    ks = F.array_max(
+        F.transform(
+            F.concat("q_base", "q_curr"),
+            lambda x: F.abs(at_or_below("q_base", x) - at_or_below("q_curr", x)),
+        )
+    ) / F.lit(float(_KS_GRID))
+    per = j.withColumn("ks_stat", ks).select(
         *keys,
         F.lit(epoch).alias("epoch"),
         F.when(both, F.col("ks_stat") <= ks_threshold).otherwise(F.lit(False)).alias("passed"),
         F.when(
             both,
             F.format_string(
-                "tdigest ks=%.4f (n_base=%d n_curr=%d)",
+                "kll ks=%.4f (n_base=%d n_curr=%d)",
                 F.col("ks_stat"),
                 F.col("n_base"),
                 F.col("n_curr"),
@@ -497,8 +510,8 @@ def check_quantile_drift(
         ).otherwise(
             F.format_string(
                 "missing baseline or current digest (n_base=%d n_curr=%d)",
-                F.coalesce(F.col("n_base"), F.lit(0)),
-                F.coalesce(F.col("n_curr"), F.lit(0)),
+                F.col("n_base"),
+                F.col("n_curr"),
             )
         ).alias("summary"),
         F.to_json(F.struct(F.col("ks_stat"), F.col("n_base"), F.col("n_curr"))).alias("metrics"),

@@ -16,8 +16,11 @@ Scale design:
     row, so later epochs/partitions merge via hll_union_agg WITHOUT
     rescanning data — the reference's immutable-snapshot chain, but for
     sketches.
+  - Quantile sketches for the quantile-drift check (kll_profiles) are
+    Spark's DataSketches KLL (kll_sketch_agg_double), merged the same
+    way with kll_merge_agg_double.
   - All expressions are built-in Catalyst functions (whole-stage
-    codegen); there is no Python in this pass at all.
+    codegen); no profile in this module runs a Python worker.
 """
 
 from __future__ import annotations
@@ -202,72 +205,24 @@ def profile_spans(
     )
 
 
-def kind_histogram(
-    docs: DataFrame,
-    group_cols: Sequence[str] = ("epoch", "partition_id"),
-    spans_col: str = "spans",
-) -> DataFrame:
-    """Categorical histogram of span kinds per group as map<kind,count>."""
-    group_cols = [c for c in group_cols if c in docs.columns]
-    return (
-        docs.select(*group_cols, F.explode(f"{spans_col}.kind").alias("__kind"))
-        .groupBy(
-            *group_cols, F.coalesce(F.col("__kind"), F.lit("unknown")).alias("kind")
-        )
-        .count()
-        .groupBy(*group_cols)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct(F.col("kind"), F.col("count"))))
-            ).alias("kind_histogram")
-        )
-    )
-
-
-def tdigest_profiles(
+def kll_profiles(
     df: DataFrame,
     value: str,
     group_cols: Sequence[str] = ("epoch", "partition_id"),
-    delta: int = 128,
 ) -> DataFrame:
-    """Per-group t-digest quantile sketches (binary, mergeable) via
-    grouped applyInPandas — the custom-UDAF tier of the profiler
-    (SURVEY §4.2). Output: group_cols..., tdigest (binary), n (long)."""
-    import pandas as pd
+    """Per-group KLL quantile sketches of ``value`` cast to double.
 
-    from ..functions import sketch
-
+    Output: group_cols..., kll (binary DataSketches KLL doubles sketch,
+    k = 200), n (long: values counted, null and NaN excluded). The sketch
+    is a native partial aggregate: it combines map-side, and sketches of
+    several groups or epochs merge with kll_merge_agg_double without
+    touching the data again.
+    """
     group_cols = [c for c in group_cols if c in df.columns]
-    out_schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [T.StructField("tdigest", T.BinaryType()), T.StructField("n", T.LongType())]
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value].to_numpy(dtype="float64", na_value=float("nan"))
-        blob = sketch.build(vals, delta)
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["tdigest"] = [bytearray(blob)]
-        row["n"] = [int((~pd.isna(pdf[value])).sum())]
-        return pd.DataFrame(row)
-
-    return df.select(*group_cols, value).groupBy(*group_cols).applyInPandas(
-        build, schema=out_schema
-    )
-
-
-def merge_tdigests_tree(profiles: DataFrame, delta: int = 128, depth: int = 2) -> bytes:
-    """Merge per-partition sketches to one table-level digest with
-    RDD treeAggregate (north_rule: 'merged with treeAggregate') —
-    log-depth combining so no single reducer sees every sketch."""
-    from ..functions import sketch
-
-    blobs = profiles.select("tdigest").rdd.map(lambda r: bytes(r[0]))
-    return blobs.treeAggregate(
-        sketch.serialize(__import__("numpy").empty(0), __import__("numpy").empty(0)),
-        lambda acc, b: sketch.merge([acc, b], delta),
-        lambda a, b: sketch.merge([a, b], delta),
-        depth=depth,
+    return (
+        df.groupBy(*group_cols)
+        .agg(F.kll_sketch_agg_double(F.col(value).cast("double")).alias("kll"))
+        .withColumn("n", F.kll_sketch_get_n_double("kll"))
     )
 
 

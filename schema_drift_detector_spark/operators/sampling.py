@@ -411,8 +411,7 @@ def temperature_mix(
     runs, engines, and cluster sizes, like everything in this module.
 
     NULL-STRATUM rows are DROPPED (they cannot be attributed to a
-    mixture component — mirror of source_reputation's ineligibility
-    contract); NULL-KEY rows within a stratum pass through exempt by
+    mixture component); NULL-KEY rows within a stratum pass through exempt by
     default (cap_per_group's contract; ``keep_null_keys=False`` drops
     them). Stratum sizes count every non-null-stratum row, null keys
     included — the weight reflects the stratum's true mass even though

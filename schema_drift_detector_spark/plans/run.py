@@ -32,12 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators import constraints as C
 from ..operators.diff import diff_field_lists
-from ..operators.profile import (
-    numeric_histogram,
-    profile_columns,
-    profile_spans,
-    tdigest_profiles,
-)
+from ..operators.profile import kll_profiles, numeric_histogram, profile_columns, profile_spans
 from ..operators.snapshot import field_list
 from ..sources.io import input_fingerprint
 from . import manifest as M
@@ -76,15 +71,21 @@ def baseline_histogram(docs: DataFrame, spec: dict[str, Any]) -> DataFrame:
 
 
 def baseline_tdigest(docs: DataFrame) -> DataFrame:
-    return tdigest_profiles(_offsets_view(docs), "off", ["partition_id"])
+    """Per-partition KLL sketches of span offsets (partition_id, kll, n) —
+    either side of the quantile-drift KS check. The name predates the
+    KLL sketch; callers pass the result per call, nothing persists it."""
+    return kll_profiles(_offsets_view(docs), "off", ["partition_id"])
 
 
 def baseline_kind_counts(docs: DataFrame) -> DataFrame:
-    """Long-format span-kind counts (partition_id, category, cnt) — the
-    baseline side of the categorical-drift chi-square check."""
+    """Long-format span-kind counts (partition_id, category, cnt) — either
+    side of the categorical-drift chi-square check. Null kinds count as
+    'unknown', as in profile_spans: a null category never matches itself
+    in the check's join."""
+    kind = F.coalesce(F.col("category"), F.lit("unknown")).alias("category")
     return (
         docs.select("partition_id", F.explode("spans.kind").alias("category"))
-        .groupBy("partition_id", "category")
+        .groupBy("partition_id", kind)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -306,7 +307,7 @@ def run_validation(
             if baseline_td is not None:
                 qd_v = C.check_quantile_drift(
                     baseline_td,
-                    tdigest_profiles(_offsets_view(subset), "off", ["partition_id"]),
+                    baseline_tdigest(subset),
                     run_id,
                     epoch,
                     ks_threshold=spec.get("quantile_drift", {}).get("ks_threshold", 0.1),

@@ -138,27 +138,54 @@ def test_categorical_drift_on_span_kinds(spark, docs):
 
 
 def test_quantile_drift_fails_closed_on_one_sided_groups(spark):
-    """A partition with a baseline digest but no current one (vanished),
-    or vice versa (new), must FAIL — not silently drop out of an inner
-    join."""
-    import numpy as np
+    """A partition with a baseline sketch but no current one (vanished),
+    or vice versa (new), or one whose current values are all null, must
+    FAIL — not silently drop out of an inner join or compare against an
+    empty sketch. Null and NaN values are not counted in n."""
+    import json
 
-    from schema_drift_detector_spark.functions import sketch
     from schema_drift_detector_spark.operators.constraints import check_quantile_drift
+    from schema_drift_detector_spark.operators.profile import kll_profiles
 
-    blob = bytearray(sketch.build(np.arange(100, dtype=np.float64)))
-    base = spark.createDataFrame(
-        [(0, blob, 100), (1, blob, 100)], "partition_id int, tdigest binary, n long"
-    )
-    curr = spark.createDataFrame(
-        [(0, blob, 100), (2, blob, 100)], "partition_id int, tdigest binary, n long"
-    )
+    def sketches(values_by_partition):
+        rows = [(p, v) for p, vs in values_by_partition.items() for v in vs]
+        return kll_profiles(
+            spark.createDataFrame(rows, "partition_id int, v double"), "v", ["partition_id"]
+        )
+
+    full = [float(i) for i in range(100)]
+    with_missing = full + [None, float("nan")]
+    base = sketches({0: with_missing, 1: full, 3: full})
+    curr = sketches({0: with_missing, 2: full, 3: [None, None]})
     v = {r.partition_id: r for r in check_quantile_drift(base, curr, "q", 1).collect()}
-    assert set(v) == {0, 1, 2}
-    assert v[0].passed is True            # identical digests
+    assert set(v) == {0, 1, 2, 3}
+    assert v[0].passed is True            # identical sketches
     assert v[1].passed is False           # vanished from current
     assert v[2].passed is False           # new without baseline
+    assert v[3].passed is False           # only null values in current
     assert "missing baseline or current digest" in v[1].summary
+    assert v[3].summary == "missing baseline or current digest (n_base=100 n_curr=0)"
+    m0 = json.loads(v[0].metrics)
+    assert (m0["ks_stat"], m0["n_base"], m0["n_curr"]) == (0.0, 100, 100)
+
+
+def test_categorical_drift_null_kinds_match_across_sides(spark):
+    """Null span kinds count as one category ('unknown') on both sides,
+    so identical data passes: a null category never matches itself in
+    the full-outer join and would read as drift."""
+    from schema_drift_detector_spark.operators.constraints import check_categorical_drift
+    from schema_drift_detector_spark.plans.run import baseline_kind_counts
+
+    spans = [("text", "t", None, 0), ("image", None, "m", 1), (None, None, None, 2),
+             ("text", "u", None, 3), ("audio", None, "a", 4)]
+    docs = spark.createDataFrame(
+        [(i % 2, spans) for i in range(50)],
+        "partition_id int, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    kinds = baseline_kind_counts(docs)
+    v = check_categorical_drift(kinds, baseline_kind_counts(docs), "c", 0).collect()
+    assert sorted(r.partition_id for r in v) == [0, 1]
+    assert all(r.passed for r in v), [r.summary for r in v]
 
 
 def test_ri_bloom_catalog_matches_plain_join(spark):

@@ -34,11 +34,8 @@ PENDING_DELETION = frozenset(
         "operators/layout.py",
         "operators/multimodal.py",
         "operators/packing.py",
-        "operators/quality_lm.py",
         "operators/quantize.py",
-        "operators/reputation.py",
         "operators/resample.py",
-        "operators/retrieval.py",
         "operators/sampling.py",
         "operators/substring.py",
         "streaming/__init__.py",

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from schema_drift_detector_spark.operators.profile import (
-    kind_histogram,
     merge_hll,
     numeric_histogram,
     profile_columns,
@@ -81,7 +80,8 @@ def test_null_span_kind_does_not_crash_profiles(spark):
     'unknown' instead of failing the stage on one malformed span."""
     import pyspark.sql.functions as F
 
-    from schema_drift_detector_spark.operators.profile import kind_histogram, profile_spans
+    from schema_drift_detector_spark.operators.profile import profile_spans
+    from schema_drift_detector_spark.plans.run import baseline_kind_counts
 
     docs = spark.createDataFrame(
         [(1, [("text", "hi", None, 0), (None, None, None, 5)])],
@@ -90,8 +90,8 @@ def test_null_span_kind_does_not_crash_profiles(spark):
     prof = profile_spans(docs).collect()[0]
     assert prof.n_spans == 2
     assert prof.kind_histogram == {"text": 1, "unknown": 1}
-    kh = kind_histogram(docs).collect()[0]
-    assert kh.kind_histogram == {"text": 1, "unknown": 1}
+    kinds = {r.category: r.cnt for r in baseline_kind_counts(docs).collect()}
+    assert kinds == {"text": 1, "unknown": 1}
 
 
 def test_numeric_histogram_excludes_nan_and_guards_bounds(spark):

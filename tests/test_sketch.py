@@ -1,72 +1,50 @@
-"""t-digest sketch: quantile accuracy, merge laws, Spark integration
-(applyInPandas build, treeAggregate merge, quantile-drift verdicts)."""
+"""KLL quantile sketches: Spark integration (native build and merge),
+the Catalyst KS against an exact reference, quantile-drift verdicts."""
 
 from __future__ import annotations
 
+import json
+import re
+
 import numpy as np
 import pyspark.sql.functions as F
-import pytest
 
-from schema_drift_detector_spark.functions import sketch
 from schema_drift_detector_spark.operators.constraints import check_quantile_drift
-from schema_drift_detector_spark.operators.profile import merge_tdigests_tree, tdigest_profiles
+from schema_drift_detector_spark.operators.profile import kll_profiles
+from schema_drift_detector_spark.plans.run import baseline_tdigest
 from schema_drift_detector_spark.sources.synth import SynthConfig, synth_documents
 
-
-def test_quantile_accuracy():
-    rng = np.random.default_rng(42)
-    v = rng.normal(100, 15, 50_000)
-    td = sketch.build(v)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        exact = np.quantile(v, q)
-        est = sketch.quantile(td, q)
-        assert abs(est - exact) < 1.0, (q, est, exact)
-    assert sketch.total_weight(td) == len(v)
-
-
-def test_merge_commutative_and_matches_whole():
-    rng = np.random.default_rng(7)
-    a, b = rng.exponential(5, 20_000), rng.exponential(5, 30_000)
-    ta, tb = sketch.build(a), sketch.build(b)
-    m1, m2 = sketch.merge([ta, tb]), sketch.merge([tb, ta])
-    whole = sketch.build(np.concatenate([a, b]))
-    for q in (0.1, 0.5, 0.9):
-        assert abs(sketch.quantile(m1, q) - sketch.quantile(m2, q)) < 0.2
-        assert abs(sketch.quantile(m1, q) - np.quantile(np.concatenate([a, b]), q)) < 0.3
-    assert sketch.total_weight(m1) == 50_000
-
-
-def test_ks_statistic_discriminates():
-    rng = np.random.default_rng(3)
-    a = sketch.build(rng.normal(0, 1, 20_000))
-    b = sketch.build(rng.normal(0, 1, 20_000))
-    c = sketch.build(rng.normal(1.0, 1, 20_000))
-    assert sketch.ks_statistic(a, b) < 0.05
-    assert sketch.ks_statistic(a, c) > 0.3
-    assert sketch.ks_statistic(a, a) == 0.0
-
-
 CFG = SynthConfig(n_docs=3_200, n_partitions=8, n_assets=2_000)
+# KLL's normalized rank error at k = 200 (DataSketches, 99% confidence)
+KLL_RANK_ERROR = 0.0165
 
 
 def test_tdigest_profiles_and_tree_merge(spark):
+    """Per-partition KLL sketches merge natively (kll_merge_agg_double)
+    into one table-level sketch that counts every offset and places the
+    median within the rank error."""
     docs = synth_documents(spark, CFG, epoch=0)
-    offs = docs.select("partition_id", F.explode("spans.offset").alias("off"))
-    prof = tdigest_profiles(offs, "off", ["partition_id"]).cache()
+    offs = docs.select("partition_id", F.explode("spans.offset").alias("off")).cache()
+    prof = kll_profiles(offs, "off", ["partition_id"]).cache()
     assert prof.count() == 8
-    merged = merge_tdigests_tree(prof)
-    exact_median = offs.approxQuantile("off", [0.5], 0.001)[0]
-    assert abs(sketch.quantile(merged, 0.5) - exact_median) <= 1.0
-    assert sketch.total_weight(merged) == offs.count()
+    merged = prof.agg(F.kll_merge_agg_double("kll").alias("kll")).select(
+        F.kll_sketch_get_n_double("kll").alias("n"),
+        F.kll_sketch_get_quantile_double("kll", F.lit(0.5)).alias("median"),
+    ).first()
+    assert merged.n == offs.count()
+    lo, hi = offs.approxQuantile("off", [0.5 - KLL_RANK_ERROR, 0.5 + KLL_RANK_ERROR], 0.0)
+    assert lo <= merged.median <= hi
+    offs.unpersist()
+    prof.unpersist()
 
 
 def test_quantile_drift_localized(spark):
     e0 = synth_documents(spark, CFG, epoch=0)
     e2 = synth_documents(spark, CFG, epoch=2)
-    base = tdigest_profiles(
+    base = kll_profiles(
         e0.select("partition_id", F.explode("spans.offset").alias("off")), "off", ["partition_id"]
     )
-    curr = tdigest_profiles(
+    curr = kll_profiles(
         e2.select("partition_id", F.explode("spans.offset").alias("off")), "off", ["partition_id"]
     )
     v = {r.partition_id: r for r in check_quantile_drift(base, curr, "r", 2).collect()}
@@ -74,26 +52,48 @@ def test_quantile_drift_localized(spark):
     assert failing == set(CFG.drift_partitions)
 
 
-def test_sketch_edge_cases():
-    import numpy as np
+def _offsets_by_partition(docs) -> dict[int, np.ndarray]:
+    rows = docs.select("partition_id", F.col("spans.offset").alias("o")).collect()
+    out: dict[int, list[int]] = {}
+    for r in rows:
+        out.setdefault(r.partition_id, []).extend(r.o)
+    return {p: np.sort(np.asarray(v, dtype=np.float64)) for p, v in out.items()}
 
-    # empty
-    e = sketch.build(np.array([]))
-    assert sketch.total_weight(e) == 0.0
-    assert sketch.ks_statistic(e, e) == 0.0
-    # constant values
-    c = sketch.build(np.full(10_000, 7.0))
-    assert sketch.quantile(c, 0.01) == 7.0 == sketch.quantile(c, 0.99)
-    # single value
-    s = sketch.build(np.array([3.5]))
-    assert sketch.quantile(s, 0.5) == 3.5
-    # NaNs dropped
-    n = sketch.build(np.array([1.0, float("nan"), 2.0]))
-    assert sketch.total_weight(n) == 2.0
-    # merge with empty is identity on weight
-    m = sketch.merge([e, c])
-    assert sketch.total_weight(m) == 10_000
-    # tiny delta still ends bounded
-    t = sketch.build(np.random.default_rng(1).normal(0, 1, 5_000), delta=8)
-    means, _ = sketch.deserialize(t)
-    assert len(means) <= 16  # delta-capped (compression overshoot ≤ 2x)
+
+def _exact_ks(a: np.ndarray, b: np.ndarray) -> float:
+    xs = np.union1d(a, b)
+    fa = np.searchsorted(a, xs, side="right") / len(a)
+    fb = np.searchsorted(b, xs, side="right") / len(b)
+    return float(np.abs(fa - fb).max())
+
+
+def test_kll_ks_matches_exact_ks(spark):
+    """The Catalyst KS over two KLL sketches stays within 0.025 of the
+    exact two-sample KS computed with numpy from the raw offsets, on
+    drifted and undrifted partitions alike. The budget covers the rank
+    grid (0.5/100 per side) plus the sketches' rank error (KLL_RANK_ERROR
+    each, at 99% confidence, rarely both at full size and sign)."""
+    e0 = synth_documents(spark, CFG, epoch=0)
+    e2 = synth_documents(spark, CFG, epoch=2)
+    got = {
+        r.partition_id: json.loads(r.metrics)["ks_stat"]
+        for r in check_quantile_drift(baseline_tdigest(e0), baseline_tdigest(e2), "r", 2).collect()
+    }
+    a, b = _offsets_by_partition(e0), _offsets_by_partition(e2)
+    assert set(got) == set(a) == set(range(CFG.n_partitions))
+    for p in got:
+        exact = _exact_ks(a[p], b[p])
+        assert abs(got[p] - exact) <= 0.025, (p, got[p], exact)
+
+
+def test_quantile_drift_plans_run_no_python(spark):
+    """Building the sketches and the KS check are native Catalyst plans:
+    no Python UDF or grouped-pandas node in either executed plan."""
+    docs = synth_documents(spark, CFG, epoch=0)
+    base = baseline_tdigest(docs)
+    check = check_quantile_drift(base, baseline_tdigest(docs), "r", 0)
+    python_nodes = re.compile(r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas")
+    for df in (base, check):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not python_nodes.search(plan), plan
