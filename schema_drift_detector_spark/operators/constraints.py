@@ -3,9 +3,11 @@
 The north_star's "diff/detect" stage generalizing the reference's drift
 detection (detector_agent.py) to data constraints:
 
-  - uniqueness on doc_id        (salted two-phase aggregation for skew)
+  - uniqueness on doc_id        (one-phase COUNT with map-side partial
+                                 aggregation; a null key is a violation)
   - referential integrity       (media_ref → asset catalog; broadcast or
-                                 shuffle-hash anti-join)
+                                 shuffle-hash anti-join; a null ref on a
+                                 non-text span is dangling)
   - distribution drift          (KS statistic + chi-square between epoch
                                  histograms — computed IN Spark on
                                  long-format histogram rows, so millions
@@ -57,21 +59,22 @@ def _verdict(df: DataFrame, run_id: str, constraint: str) -> DataFrame:
 def duplicate_keys(
     df: DataFrame,
     key: str = "doc_id",
-    salt_buckets: int = 16,
+    salt_buckets: int = 1,
     assume_bucketed: bool = False,
 ) -> DataFrame:
-    """Keys occurring more than once — salted two-phase aggregation.
+    """Non-null keys occurring more than once. Null keys are left out: a
+    null is not an identifier, and check_uniqueness flags null-key rows
+    on their own.
 
-    Phase 1 groups by (key, salt) where salt = crc32(key-reversed) %
-    buckets... no: the salt must split IDENTICAL keys, so it derives
-    from physical position (spark_partition_id), not the key. A hot key
-    that would overwhelm one reducer is first counted per (key, salt)
-    across `salt_buckets` reducers (map-side combine shrinks this
-    further), then the partial counts — at most `salt_buckets` rows per
-    key — are summed in a cheap second aggregation.
+    The default is a one-phase groupBy(key).count(). Its map-side
+    partial aggregation sends at most one row per key per map task, so
+    even a hot key reaches its reducer as a handful of partial counts.
 
-    north_rule: "uniqueness on doc_id via salted repartition +
-    hash-based dedup detection".
+    salt_buckets > 1 selects a salted two-phase aggregation. The salt
+    must split IDENTICAL keys, so it derives from physical position
+    (spark_partition_id), not the key: a key is first counted per
+    (key, salt) across `salt_buckets` reducers, then the partial counts
+    are summed in a second aggregation.
 
     assume_bucketed=True is the opt-in for tables ALREADY bucketed on
     ``key`` (written via sources.io.write_bucketed and read through
@@ -82,12 +85,9 @@ def duplicate_keys(
     Bucketing also bounds skew by construction (a hot key lives in one
     bucket file, counted by map-side combine within its scan tasks).
     """
+    df = df.filter(F.col(key).isNotNull())
     if assume_bucketed or salt_buckets <= 1:
-        # bucketed: the layout co-locates keys — zero Exchange.
-        # salt_buckets <= 1: caller (e.g. choose_salt_buckets' data-
-        # driven decision) established no key is hot — a plain one-phase
-        # aggregation (one Exchange, map-side combine) beats paying the
-        # two-phase salt plumbing for nothing.
+        # bucketed: the layout co-locates keys — zero Exchange
         return (
             df.groupBy(key)
             .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -109,13 +109,14 @@ def check_uniqueness(
     run_id: str,
     key: str = "doc_id",
     group_cols: Sequence[str] = ("epoch", "partition_id"),
-    salt_buckets: int = 16,
+    salt_buckets: int = 1,
     dups: DataFrame | None = None,
     assume_bucketed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """→ (verdicts, violations). A partition fails iff it contains any
-    row whose key is globally duplicated. Violation rows carry the
-    first span's sequence evidence for each duplicated doc.
+    """→ (verdicts, violations). A partition fails iff it contains a row
+    whose key is null or globally duplicated: a null key is not an
+    identifier. Violation rows carry the first span's sequence evidence
+    for each such doc.
 
     "Globally" means over ``docs`` — when validating a subset (e.g. one
     batch of partitions), pass ``dups`` precomputed over the FULL table
@@ -130,9 +131,11 @@ def check_uniqueness(
         dups = duplicate_keys(docs, key, salt_buckets, assume_bucketed).cache()
     else:
         dups = dups.select(key, "n_occurrences")
-    offenders = docs.join(F.broadcast(dups), on=key, how="inner")
+    flagged = docs.join(F.broadcast(dups), on=key, how="left")
+    is_dup = F.col("n_occurrences").isNotNull()
+    is_null = F.col(key).isNull()
 
-    violations = offenders.select(
+    violations = flagged.filter(is_dup | is_null).select(
         F.lit(run_id).alias("run_id"),
         F.col("epoch").cast("int").alias("epoch"),
         F.col("partition_id").cast("int").alias("partition_id"),
@@ -144,28 +147,32 @@ def check_uniqueness(
         F.lit(0).alias("span_order"),
     )
 
+    passed = (F.col("n_dup_rows") == 0) & (F.col("n_null_keys") == 0)
     per_part = (
-        docs.join(F.broadcast(dups), on=key, how="left")
-        .groupBy(*group_cols)
+        flagged.groupBy(*group_cols)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("n_occurrences").isNotNull(), 1).otherwise(0)).alias("n_dup_rows"),
-            F.count_distinct(F.when(F.col("n_occurrences").isNotNull(), F.col(key))).alias(
-                "n_dup_keys"
-            ),
+            F.count_if(is_dup).alias("n_dup_rows"),
+            F.count_distinct(F.when(is_dup, F.col(key))).alias("n_dup_keys"),
+            F.count_if(is_null).alias("n_null_keys"),
         )
         .select(
             *group_cols,
-            (F.col("n_dup_rows") == 0).alias("passed"),
-            F.when(F.col("n_dup_rows") == 0, F.lit("uniqueness ok"))
+            passed.alias("passed"),
+            F.when(passed, F.lit("uniqueness ok"))
             .otherwise(
                 F.format_string(
-                    "%d duplicate rows across %d keys", F.col("n_dup_rows"), F.col("n_dup_keys")
+                    "%d duplicate rows across %d keys, %d null keys",
+                    F.col("n_dup_rows"),
+                    F.col("n_dup_keys"),
+                    F.col("n_null_keys"),
                 )
             )
             .alias("summary"),
             F.to_json(
-                F.struct(F.col("n_rows"), F.col("n_dup_rows"), F.col("n_dup_keys"))
+                F.struct(
+                    F.col("n_rows"), F.col("n_dup_rows"), F.col("n_dup_keys"), F.col("n_null_keys")
+                )
             ).alias("metrics"),
         )
     )
@@ -208,22 +215,28 @@ def check_referential_integrity(
                                 In this mode the residual join defaults
                                 to NON-broadcast (the catalog is huge by
                                 premise); pass broadcast_catalog=True to
-                                override.
+                                override. run_validation does not use
+                                this mode: on valid refs the filter
+                                passes nearly every row, so the exact
+                                join sees them all anyway.
 
     ``bloom`` accepts a prebuilt probe — either the column function from
-    functions.bloom.bloom_probe_for/might_contain_udf (preferred: ONE
-    broadcast reused across batches) or a raw (bitmap, m_bits, k) tuple
-    (re-broadcast per call) — so per-batch callers (run_validation's
-    loop) build the filter ONCE per run, not once per batch.
+    functions.bloom.bloom_probe_for/might_contain_udf (ONE broadcast
+    reused across calls) or a raw (bitmap, m_bits, k) tuple
+    (re-broadcast per call).
 
-    Null media_ref on a text span is NOT a violation (kind-conditional
-    nullability per FIXTURES F1).
+    Kind-conditional nullability per FIXTURES F1: a null media_ref on a
+    text span is NOT a violation, and a null media_ref on a span of any
+    other (non-null) kind is dangling. Every partition of ``docs`` gets
+    a verdict, also one with no refs (n_refs = 0, passed).
     """
     group_cols = [c for c in group_cols if c in docs.columns]
+    # posexplode_outer keeps docs with no spans, so every partition
+    # present reaches the counts; their padding row (null span) is no ref
     spans = docs.select(
         *group_cols,
         F.col("doc_id"),
-        F.posexplode("spans").alias("span_order", "s"),
+        F.posexplode_outer("spans").alias("span_order", "s"),
     ).select(
         *group_cols,
         "doc_id",
@@ -232,7 +245,8 @@ def check_referential_integrity(
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
     )
-    refs = spans.filter(F.col("media_ref").isNotNull())
+    is_ref = F.col("media_ref").isNotNull() | (F.col("kind") != "text")
+    refs = spans.filter(is_ref)
     if bloom_catalog:
         from ..functions.bloom import bloom_probe_for, might_contain_udf
 
@@ -249,9 +263,12 @@ def check_referential_integrity(
             mc = bloom  # prebuilt probe — broadcast already live
         else:
             mc = might_contain_udf(docs.sparkSession, *bloom)
-        tagged = refs.withColumn("__maybe", mc("media_ref"))
+        # a null ref is dangling without a probe
+        tagged = refs.filter(F.col("media_ref").isNotNull()).withColumn("__maybe", mc("media_ref"))
         residual = tagged.filter(F.col("__maybe")).drop("__maybe")
-        definite = tagged.filter(~F.col("__maybe")).drop("__maybe")
+        definite = tagged.filter(~F.col("__maybe")).drop("__maybe").unionByName(
+            refs.filter(F.col("media_ref").isNull())
+        )
         # an anti-join is insensitive to duplicate right-side rows, so
         # distinct only pays off when shrinking an explicit broadcast
         if broadcast_catalog is True:
@@ -274,6 +291,7 @@ def check_referential_integrity(
         cat = catalog.select("media_ref").distinct()
         if broadcast_catalog is not False:  # plain-path default: broadcast
             cat = F.broadcast(cat)
+        # a null ref matches no catalog row, so the anti-join keeps it
         dangling = refs.join(cat, on="media_ref", how="left_anti")
 
     violations = dangling.select(
@@ -289,9 +307,9 @@ def check_referential_integrity(
     )
 
     if bloom_catalog:
-        # n_refs from one refs aggregation; n_dangling from the (tiny)
+        # n_refs from one spans aggregation; n_dangling from the (tiny)
         # dangling set — no full refs⋈catalog join anywhere
-        n_refs = refs.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n_refs"))
+        n_refs = spans.groupBy(*group_cols).agg(F.count_if(is_ref).alias("n_refs"))
         n_dang = dangling.groupBy(*group_cols).agg(
             F.count(F.lit(1)).alias("n_dangling")
         )
@@ -299,14 +317,14 @@ def check_referential_integrity(
             0, subset=["n_dangling"]
         )
     else:
-        # one pass over refs: count dangling per partition via a left
-        # join flag (cheaper than re-scanning docs)
-        flagged = refs.join(
+        # one pass over the spans: conditional counts over a left join
+        # flag (a non-ref span has a null ref and matches nothing)
+        flagged = spans.join(
             cat.withColumn("__ok", F.lit(1)), on="media_ref", how="left"
         )
         counts = flagged.groupBy(*group_cols).agg(
-            F.count(F.lit(1)).alias("n_refs"),
-            F.sum(F.when(F.col("__ok").isNull(), 1).otherwise(0)).alias("n_dangling"),
+            F.count_if(is_ref).alias("n_refs"),
+            F.count_if(is_ref & F.col("__ok").isNull()).alias("n_dangling"),
         )
     per_part = (
         counts

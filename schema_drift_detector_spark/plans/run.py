@@ -39,11 +39,16 @@ from . import manifest as M
 from . import policy, records, store
 
 DEFAULT_SPEC: dict[str, Any] = {
-    "uniqueness": {"key": "doc_id", "salt_buckets": 16},
-    # broadcast_catalog None = per-mode default (plain join: broadcast;
-    # bloom mode: NON-broadcast residual). Pinning True here would leak
-    # a full-catalog broadcast into bloom runs via the section merge —
-    # the exact thing bloom_catalog exists to avoid.
+    # salt_buckets 1 = the one-phase groupBy(key).count(): its map-side
+    # partial aggregation sends at most one row per key per map task, so
+    # a hot key does not skew the reduce; > 1 selects duplicate_keys'
+    # salted two-phase path. auto_salt and auto_salt_phi are accepted
+    # and ignored.
+    "uniqueness": {"key": "doc_id", "salt_buckets": 1},
+    # broadcast_catalog None = broadcast the catalog, unless bloom_catalog
+    # says it is too big to broadcast: then no hint, and AQE picks the
+    # join. Either way RI is one anti-join; bloom_bits_per_key,
+    # bloom_expected_items and bloom_max_bytes are accepted and ignored.
     "referential_integrity": {"broadcast_catalog": None},
     "distribution_drift": {
         "column": "offset",
@@ -192,51 +197,22 @@ def run_validation(
     # uniqueness scope is the FULL table, not the batch: duplicates of
     # the same doc_id landing in partitions of different batches (or in
     # batches of a previous, interrupted attempt) must still be caught —
-    # one key-only scan + salted aggregation for the whole run, reused
+    # one key-only scan + one-phase aggregation for the whole run, reused
     # by every batch via the cached (tiny) dup-key set
+    uq_spec = spec["uniqueness"]
     dups = None
-    uq_spec = dict(spec["uniqueness"])
     if batches:
         # spec {'uniqueness': {'bucketed': True}} opts into the zero-
-        # Exchange one-phase aggregation for tables pre-bucketed on the
-        # key (see duplicate_keys); the salt path is the default for
-        # arbitrary layouts
-        if uq_spec.get("auto_salt") and not uq_spec.get("bucketed"):
-            # close the detection→decision loop (r3 verdict #2): measure
-            # the hottest key's share ONCE per run (heavy_hitters —
-            # metadata-scale shuffles only) and size the salt from it;
-            # 1 means no hot key → duplicate_keys skips salting and its
-            # second shuffle stage entirely
-            from ..operators.skew import choose_salt_buckets
-
-            uq_spec["salt_buckets"] = choose_salt_buckets(
-                docs,
-                uq_spec.get("key", "doc_id"),
-                phi=uq_spec.get("auto_salt_phi", 0.002),
-            )
+        # Exchange aggregation for tables pre-bucketed on the key (see
+        # duplicate_keys)
         dups = C.duplicate_keys(
-            docs,
-            uq_spec.get("key", "doc_id"),
-            uq_spec.get("salt_buckets", 16),
-            uq_spec.get("bucketed", False),
+            docs, uq_spec["key"], uq_spec["salt_buckets"], uq_spec.get("bucketed", False)
         ).cache()
 
-    # like dups: the RI bloom filter is a RUN-scoped artifact — build and
-    # BROADCAST it once here, not once per batch inside the loop (each
-    # build is a catalog scan + a bitmap shuffle; each broadcast pins a
-    # bitmap copy until GC)
-    ri_spec = dict(spec["referential_integrity"])
-    if batches and ri_spec.get("bloom_catalog") and "bloom" not in ri_spec:
-        from ..functions.bloom import bloom_probe_for
-
-        ri_spec["bloom"] = bloom_probe_for(
-            spark,
-            catalog,
-            "media_ref",
-            ri_spec.get("bloom_bits_per_key", 10),
-            ri_spec.get("bloom_expected_items"),
-            ri_spec.get("bloom_max_bytes"),
-        )
+    ri_spec = spec["referential_integrity"]
+    broadcast_catalog = ri_spec["broadcast_catalog"]
+    if broadcast_catalog is None:
+        broadcast_catalog = not ri_spec.get("bloom_catalog", False)
 
     # partitions present in a drift baseline but ABSENT from the current
     # table "vanished" — that is drift, and the fail-closed verdict the
@@ -268,21 +244,9 @@ def run_validation(
             # manifest counts, so the batch is not rescanned for bookkeeping
             profiles = profile_columns(subset, snapshot_id=snapshot_id, entity=entity).persist()
             span_prof = profile_spans(subset)
-            # uq_spec, not spec["uniqueness"]: carries the auto_salt
-            # decision; the auto_* knobs themselves are run-level and
-            # not check_uniqueness parameters
-            uq_v, uq_viol = C.check_uniqueness(
-                subset,
-                run_id,
-                dups=dups,
-                **{
-                    ("assume_bucketed" if k == "bucketed" else k): v
-                    for k, v in uq_spec.items()
-                    if k not in ("auto_salt", "auto_salt_phi")
-                },
-            )
+            uq_v, uq_viol = C.check_uniqueness(subset, run_id, key=uq_spec["key"], dups=dups)
             ri_v, ri_viol = C.check_referential_integrity(
-                subset, catalog, run_id, **ri_spec
+                subset, catalog, run_id, broadcast_catalog=broadcast_catalog
             )
             verdicts = uq_v.unionByName(ri_v)
             violations = uq_viol.unionByName(ri_viol)
@@ -405,10 +369,9 @@ def run_validation(
                 # partition's row count). The uniqueness key is the natural
                 # single atomic column and is spec-configurable — no
                 # hardcoded 'doc_id'.
-                uq_key = spec["uniqueness"].get("key", "doc_id")
                 counts = {
                     r.partition_id: r.n
-                    for r in profiles.filter(F.col("column") == uq_key)
+                    for r in profiles.filter(F.col("column") == uq_spec["key"])
                     .groupBy("partition_id")
                     .agg(F.sum("n_rows").alias("n"))
                     .collect()
@@ -472,16 +435,6 @@ def run_validation(
         "partitions_pending_before": pending,
         "batches_executed": executed,
         "out_dir": out_dir,
-        # effective salting decision (auto_salt may have overridden the
-        # spec): 1 = unsalted one-phase path; None = no uniqueness
-        # aggregation ran this invocation (bucketed layout, or a fully
-        # resumed run with nothing pending — reporting the static spec
-        # there would fake a decision that was never made)
-        "uniqueness_salt_buckets": (
-            None
-            if uq_spec.get("bucketed") or not batches
-            else uq_spec.get("salt_buckets", 16)
-        ),
     }
     return envelope
 

@@ -242,3 +242,64 @@ def test_ri_bloom_catalog_matches_plain_join(spark):
     # before any Spark job runs
     with pytest.raises(ValueError, match="GiB.*ceiling"):
         build_bloom(cat, "media_ref", expected_items=10**10, bits_per_key=10)
+
+
+def test_null_keys_null_refs_and_refless_partitions(spark):
+    """Hostile input the generator never makes (FIXTURES F1 semantics):
+    a null doc_id is not an identifier, so each null-key row violates
+    uniqueness and no null key is a duplicate; a null media_ref on a
+    non-text span is dangling; and a partition with no media refs (text
+    only, an empty span list, or null spans) still gets an RI verdict."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from schema_drift_detector_spark.model import SPAN_STRUCT
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType(), True),
+            T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
+            T.StructField("partition_id", T.IntegerType(), False),
+            T.StructField("epoch", T.IntegerType(), False),
+        ]
+    )
+    text = [("text", "hello", None, 0)]
+    docs = spark.createDataFrame(
+        [
+            ("a", text, 0, 0),
+            (None, text, 0, 0),
+            (None, text, 0, 0),
+            (None, text, 0, 0),
+            (
+                "b",
+                [("image", None, "asset-1", 0), ("image", None, None, 1), ("text", "t", None, 2)],
+                1,
+                0,
+            ),
+            ("c", [], 2, 0),
+            ("d", None, 2, 0),
+        ],
+        schema,
+    )
+    catalog = spark.createDataFrame([("asset-1",)], "media_ref string")
+
+    assert duplicate_keys(docs).count() == 0
+    uq_v, uq_viol = check_uniqueness(docs, run_id="h")
+    uq = {r.partition_id: r for r in uq_v.collect()}
+    assert uq[0].passed is False and uq[1].passed and uq[2].passed
+    assert json.loads(uq[0].metrics)["n_null_keys"] == 3
+    assert "3 null keys" in uq[0].summary
+    assert sorted((r.partition_id, r.doc_id) for r in uq_viol.collect()) == [(0, None)] * 3
+
+    for kw in ({}, {"broadcast_catalog": False}, {"bloom_catalog": True}):
+        ri_v, ri_viol = check_referential_integrity(docs, catalog, "h", **kw)
+        ri = {r.partition_id: (r.passed, json.loads(r.metrics)) for r in ri_v.collect()}
+        assert ri == {
+            0: (True, {"n_refs": 0, "n_dangling": 0}),
+            1: (False, {"n_refs": 2, "n_dangling": 1}),
+            2: (True, {"n_refs": 0, "n_dangling": 0}),
+        }, kw
+        assert [(r.doc_id, r.kind, r.media_ref, r.span_order) for r in ri_viol.collect()] == [
+            ("b", "image", None, 1)
+        ], kw

@@ -1,6 +1,9 @@
 """Every module in the package must be reachable from the validation
 path: plans.run (run_validation), plus session and sources.{io,synth}
-that perfbench drives. A module nothing imports is deleted, not kept.
+that perfbench drives, or from perfbench's own modules. A module
+nothing imports is deleted, not kept. (Library code that only
+perfbench's traced sweep still calls stays reached through perfbench;
+once the sweep stops calling it, this test fails until it is deleted.)
 
 The corpus-toolkit modules in PENDING_DELETION predate that rule and
 are still unreached; they go in later, test-sized steps. The list only
@@ -19,6 +22,7 @@ from pathlib import Path
 PKG = "schema_drift_detector_spark"
 ROOT = Path(__file__).resolve().parents[1] / PKG
 ENTRY_POINTS = ("plans.run", "session", "sources.io", "sources.synth")
+BENCH = ROOT.parent / "perfbench"
 PENDING_DELETION = frozenset(
     {
         "functions/cms.py",
@@ -55,11 +59,15 @@ def _module_file(name: str) -> Path | None:
 
 
 def _imported_modules(name: str) -> set[str]:
-    """Package modules named by any import statement in ``name``; for
-    ``from m import x`` both ``m`` and ``m.x`` are candidates, since
-    ``x`` may be a submodule."""
     path = _module_file(name)
     package = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+    return _package_imports(path, package)
+
+
+def _package_imports(path: Path, package: list[str]) -> set[str]:
+    """Package modules named by any import statement in the file at
+    ``path`` (a module of ``package``); for ``from m import x`` both
+    ``m`` and ``m.x`` are candidates, since ``x`` may be a submodule."""
     named: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
@@ -78,6 +86,8 @@ def _imported_modules(name: str) -> set[str]:
 def _reached_files() -> set[Path]:
     seen: set[str] = set()
     stack = [f"{PKG}.{m}" for m in ENTRY_POINTS]
+    for path in BENCH.glob("*.py"):
+        stack.extend(_package_imports(path, ["perfbench"]))
     while stack:
         name = stack.pop()
         if name in seen:

@@ -291,9 +291,9 @@ def test_quantile_drift_in_pipeline(spark, docs0, catalog, tmp_path_factory):
 
 
 def test_pipeline_with_bloom_ri(spark, tmp_path):
-    """spec {'referential_integrity': {'bloom_catalog': True}} runs the
-    whole pipeline with the bloom-prefiltered RI path (filter built once
-    per run, before the batch loop) and produces the same verdicts as
+    """spec {'referential_integrity': {'bloom_catalog': True}} declares
+    the catalog too big to broadcast: the pipeline runs RI as a
+    non-broadcast join (AQE picks it) and produces the same verdicts as
     the default broadcast join — incl. the injected danglers in
     partition 3."""
     import pyspark.sql.functions as F
@@ -324,27 +324,22 @@ def test_pipeline_with_bloom_ri(spark, tmp_path):
     assert plain == bloom and bloom[3] is False and bloom[0] is True
 
 
-def test_auto_salt_decision_in_pipeline(spark, docs0, catalog, tmp_path_factory):
-    """r3 verdict #2: spec {'uniqueness': {'auto_salt': True}} closes
-    the loop from heavy_hitters to the salt_buckets knob inside
-    run_validation. On synth docs (no hot doc_id — the injected dups are
-    a few 2x keys, far under phi) the decision SKIPS the salt
-    (buckets == 1, one-phase aggregation); on a 40%-hot-key table it
-    sizes the salt from the measured share (ceil(0.4·P) with P=8 test
-    shuffle partitions → 4). Verdicts must match the static-salt run in
-    both cases."""
+def test_auto_salt_spec_is_accepted_and_verdicts_hold(spark, docs0, catalog, tmp_path_factory):
+    """spec {'uniqueness': {'auto_salt': True}} is accepted and ignored:
+    duplicate keys come from the one-phase COUNT, whose map-side partial
+    aggregation already spreads a hot key. Verdicts hold on synth docs
+    and on a 40%-hot-key table."""
     out = str(tmp_path_factory.mktemp("run_autosalt"))
-    env = run_validation(
+    run_validation(
         spark, docs0, catalog, out, run_id="as0", epoch=0,
         spec={"uniqueness": {"auto_salt": True}},
     )
-    assert env["run"]["uniqueness_salt_buckets"] == 1
     v = read_verdicts(spark, out, "as0")
     by = {(r.constraint, r.partition_id): r.passed for r in v.collect()}
     assert by[("uniqueness", 2)] is False and by[("uniqueness", 5)] is False
     assert by[("uniqueness", 0)] is True
 
-    # 40% of rows collapse onto one doc_id → the decision fires
+    # 40% of rows collapse onto one doc_id
     hot = docs0.withColumn(
         "doc_id",
         F.when(
@@ -352,30 +347,24 @@ def test_auto_salt_decision_in_pipeline(spark, docs0, catalog, tmp_path_factory)
         ).otherwise(F.col("doc_id")),
     )
     out2 = str(tmp_path_factory.mktemp("run_autosalt_hot"))
-    env2 = run_validation(
+    run_validation(
         spark, hot, catalog, out2, run_id="as1", epoch=0,
         spec={"uniqueness": {"auto_salt": True}},
     )
-    assert env2["run"]["uniqueness_salt_buckets"] > 1, env2["run"]
     # the hot key is a duplicate everywhere — every partition holding it fails
     v2 = read_verdicts(spark, out2, "as1")
     hot_fails = {r.partition_id for r in v2.collect()
                  if r.constraint == "uniqueness" and not r.passed}
     assert len(hot_fails) == 8  # HOT appears in every partition
 
-    # default (no auto_salt) still reports the static knob
+    # a fully resumed re-invocation with the knob set runs no batch
     out3 = str(tmp_path_factory.mktemp("run_static"))
-    env3 = run_validation(spark, docs0, catalog, out3, run_id="as2", epoch=0)
-    assert env3["run"]["uniqueness_salt_buckets"] == 16
-
-    # fully-resumed re-invocation: no aggregation runs, so no decision
-    # is reported (a static 16 here would fake one)
+    run_validation(spark, docs0, catalog, out3, run_id="as2", epoch=0)
     env_resumed = run_validation(
         spark, docs0, catalog, out3, run_id="as2", epoch=0,
         spec={"uniqueness": {"auto_salt": True}},
     )
     assert env_resumed["run"]["batches_executed"] == 0
-    assert env_resumed["run"]["uniqueness_salt_buckets"] is None
 
 
 def test_snapshot_durable_before_outputs_and_resume_reuses_id(
@@ -479,3 +468,54 @@ def test_legacy_parquet_store_or_manifest_fails_loudly(spark, docs0, catalog, tm
         with pytest.raises(RuntimeError, match="move it aside"):
             run_validation(spark, docs0, catalog, out, run_id="lg", epoch=0)
         assert not os.path.exists(f"{out}/verdicts")
+
+
+def test_run_validation_plans_run_no_python(spark, tmp_path):
+    """Every SQL execution a run_validation call starts is a native plan:
+    no Python UDF, pandas/Arrow map or grouped-pandas node, with the
+    resume_batched spec (auto_salt, bloom_catalog) and all three drift
+    baselines. Inputs are staged as parquet so the generator's
+    mapInPandas is not in the plans."""
+    import re
+
+    from schema_drift_detector_spark.plans.run import (
+        DEFAULT_SPEC,
+        baseline_kind_counts,
+        baseline_tdigest,
+    )
+
+    cfg = SynthConfig(n_docs=1_600, n_partitions=8, n_assets=2_000)
+    for name, df in (
+        ("e0", synth_documents(spark, cfg, epoch=0)),
+        ("e2", synth_documents(spark, cfg, epoch=2)),
+        ("catalog", synth_asset_catalog(spark, cfg)),
+    ):
+        df.write.parquet(str(tmp_path / name))
+    e0, e2, cat = (spark.read.parquet(str(tmp_path / n)) for n in ("e0", "e2", "catalog"))
+    baselines = dict(
+        baseline_hist=baseline_histogram(e0, DEFAULT_SPEC),
+        baseline_td=baseline_tdigest(e0),
+        baseline_kinds=baseline_kind_counts(e0),
+    )
+    sc = spark.sparkContext._jsc.sc()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty(60_000)
+        ex = sql_store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(executions())
+    run_validation(
+        spark, e2, cat, str(tmp_path / "out"), run_id="np", epoch=2, partition_batches=2,
+        spec={"uniqueness": {"auto_salt": True}, "referential_integrity": {"bloom_catalog": True}},
+        **baselines,
+    )
+    started = {i: e for i, e in executions().items() if i not in before}
+    assert started
+    python_nodes = re.compile(
+        r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas"
+    )
+    for i, e in started.items():
+        plan = e.physicalPlanDescription()
+        assert not python_nodes.search(plan), (i, e.description(), plan)
