@@ -19,9 +19,8 @@ Layout:
 
 Corpus toolkit, not reached from plans.run and pending deletion (see
 tests/test_package_closure.py): functions/{text,pii,similarity,cms,
-normalize}, operators/{dedup,ann,quantize,multimodal,sampling,
-incremental,packing,substring,cleaning,layout,resample,classify},
-streaming/.
+normalize}, operators/{dedup,ann,quantize,sampling,packing,
+substring,cleaning,layout,resample,classify}.
 """
 
 __version__ = "0.1.0"

@@ -1,16 +1,15 @@
 """Canonical schemas for the engine's data model (FIXTURES.md §F1/F5).
 
 Maps the reference's metadata objects to Spark StructTypes:
-  - documents           input table per BASELINE.json input_hint
-  - asset_catalog       referential-integrity dimension
+  - spans               one element of the documents table's span array
   - snapshot fields     ≙ reference FieldMeta {name,type,nullable,ordinal}
                         (csv_crawler_agent.py:277, detector_agent.py:188-194)
-  - profiles            per-partition column profiles of a snapshot
-  - changes             ≙ drift-report Change rows (detector_agent.py:569-588)
   - verdicts/violations ≙ drift report + per-row violation evidence
 
-The snapshot store and the checkpoint manifest are JSON records, not
-tables (plans/store.py, plans/manifest.py).
+The profiles and span_profiles tables take their schema from
+operators/profile.py (FIXTURES.md F5). The snapshot store and the
+checkpoint manifest are JSON records, not tables (plans/store.py,
+plans/manifest.py).
 """
 
 from __future__ import annotations
@@ -26,24 +25,6 @@ SPAN_STRUCT = T.StructType(
     ]
 )
 
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("epoch", T.IntegerType(), False),
-    ]
-)
-
-ASSET_CATALOG_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("asset_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("size_bytes", T.LongType(), True),
-    ]
-)
-
 # One row per column of a snapshotted schema — the reference's FieldMeta.
 FIELD_SCHEMA = T.StructType(
     [
@@ -51,26 +32,6 @@ FIELD_SCHEMA = T.StructType(
         T.StructField("dtype", T.StringType(), True),
         T.StructField("nullable", T.BooleanType(), True),
         T.StructField("ordinal", T.IntegerType(), True),
-    ]
-)
-
-PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("snapshot_id", T.StringType(), False),
-        T.StructField("entity", T.StringType(), True),
-        T.StructField("epoch", T.IntegerType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("column", T.StringType(), False),
-        T.StructField("ordinal", T.IntegerType(), True),
-        T.StructField("dtype", T.StringType(), True),
-        T.StructField("nullable", T.BooleanType(), True),
-        T.StructField("n_rows", T.LongType(), True),
-        T.StructField("null_ratio", T.DoubleType(), True),
-        T.StructField("min_val", T.StringType(), True),
-        T.StructField("max_val", T.StringType(), True),
-        T.StructField("approx_distinct", T.LongType(), True),
-        T.StructField("hll_sketch", T.BinaryType(), True),
-        T.StructField("histogram", T.MapType(T.StringType(), T.LongType()), True),
     ]
 )
 
@@ -100,5 +61,3 @@ VIOLATION_SCHEMA = T.StructType(
         T.StructField("span_order", T.IntegerType(), True),
     ]
 )
-
-SEVERITY_RANK = {"info": 0, "low": 1, "medium": 2, "high": 3, "warning": 4, "critical": 5}

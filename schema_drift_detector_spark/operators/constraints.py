@@ -60,7 +60,6 @@ def duplicate_keys(
     df: DataFrame,
     key: str = "doc_id",
     salt_buckets: int = 1,
-    assume_bucketed: bool = False,
 ) -> DataFrame:
     """Non-null keys occurring more than once. Null keys are left out: a
     null is not an identifier, and check_uniqueness flags null-key rows
@@ -69,25 +68,18 @@ def duplicate_keys(
     The default is a one-phase groupBy(key).count(). Its map-side
     partial aggregation sends at most one row per key per map task, so
     even a hot key reaches its reducer as a handful of partial counts.
+    Over a table already bucketed on ``key`` (sources.io.write_bucketed,
+    read through spark.table) the layout co-locates identical keys and
+    this aggregation runs with ZERO Exchange.
 
     salt_buckets > 1 selects a salted two-phase aggregation. The salt
     must split IDENTICAL keys, so it derives from physical position
     (spark_partition_id), not the key: a key is first counted per
     (key, salt) across `salt_buckets` reducers, then the partial counts
     are summed in a second aggregation.
-
-    assume_bucketed=True is the opt-in for tables ALREADY bucketed on
-    ``key`` (written via sources.io.write_bucketed and read through
-    spark.table — a plain spark.read.parquet(path) does not carry
-    bucket metadata): the layout already co-locates identical keys, so
-    a plain one-phase groupBy aggregates with ZERO Exchange, and
-    salting would only destroy that layout and force the shuffle back.
-    Bucketing also bounds skew by construction (a hot key lives in one
-    bucket file, counted by map-side combine within its scan tasks).
     """
     df = df.filter(F.col(key).isNotNull())
-    if assume_bucketed or salt_buckets <= 1:
-        # bucketed: the layout co-locates keys — zero Exchange
+    if salt_buckets <= 1:
         return (
             df.groupBy(key)
             .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -111,7 +103,6 @@ def check_uniqueness(
     group_cols: Sequence[str] = ("epoch", "partition_id"),
     salt_buckets: int = 1,
     dups: DataFrame | None = None,
-    assume_bucketed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (verdicts, violations). A partition fails iff it contains a row
     whose key is null or globally duplicated: a null key is not an
@@ -128,7 +119,7 @@ def check_uniqueness(
     # the verdict and violation actions don't re-shuffle all keys twice,
     # and broadcast it back against the table
     if dups is None:
-        dups = duplicate_keys(docs, key, salt_buckets, assume_bucketed).cache()
+        dups = duplicate_keys(docs, key, salt_buckets).cache()
     else:
         dups = dups.select(key, "n_occurrences")
     flagged = docs.join(F.broadcast(dups), on=key, how="left")

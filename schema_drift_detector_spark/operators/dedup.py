@@ -229,9 +229,7 @@ def validate_bands(k: int, bands: int) -> None:
 
 def band_buckets(signatures: DataFrame, bands: int = 16) -> DataFrame:
     """(doc, band, bucket) rows — each signature banded and each band
-    hashed. Shared by within-corpus LSH (below) and the cross-epoch
-    near-dup index (operators/incremental.py), so both join on the
-    identical bucketing."""
+    hashed, for the within-corpus LSH below."""
     return signatures.select(
         "doc",
         F.posexplode(

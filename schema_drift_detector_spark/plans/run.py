@@ -42,8 +42,8 @@ DEFAULT_SPEC: dict[str, Any] = {
     # salt_buckets 1 = the one-phase groupBy(key).count(): its map-side
     # partial aggregation sends at most one row per key per map task, so
     # a hot key does not skew the reduce; > 1 selects duplicate_keys'
-    # salted two-phase path. auto_salt and auto_salt_phi are accepted
-    # and ignored.
+    # salted two-phase path. auto_salt, auto_salt_phi and bucketed are
+    # accepted and ignored.
     "uniqueness": {"key": "doc_id", "salt_buckets": 1},
     # broadcast_catalog None = broadcast the catalog, unless bloom_catalog
     # says it is too big to broadcast: then no hint, and AQE picks the
@@ -202,12 +202,7 @@ def run_validation(
     uq_spec = spec["uniqueness"]
     dups = None
     if batches:
-        # spec {'uniqueness': {'bucketed': True}} opts into the zero-
-        # Exchange aggregation for tables pre-bucketed on the key (see
-        # duplicate_keys)
-        dups = C.duplicate_keys(
-            docs, uq_spec["key"], uq_spec["salt_buckets"], uq_spec.get("bucketed", False)
-        ).cache()
+        dups = C.duplicate_keys(docs, uq_spec["key"], uq_spec["salt_buckets"]).cache()
 
     ri_spec = spec["referential_integrity"]
     broadcast_catalog = ri_spec["broadcast_catalog"]
@@ -221,15 +216,33 @@ def run_validation(
     # executed batch (idempotent under resume: the dynamic overwrite
     # rewrites the same (run_id, partition_id) dirs). Metadata-scale
     # collects: one row per baseline partition id.
-    def _vanished(baseline: DataFrame | None) -> list[int]:
-        if baseline is None or not batches:
-            return []
+    def _vanished(baseline: DataFrame) -> list[int]:
         ids = {int(r.partition_id) for r in baseline.select("partition_id").distinct().collect()}
         return sorted(ids - set(universe))
 
-    vanished_hist = _vanished(baseline_hist)
-    vanished_kinds = _vanished(baseline_kinds)
-    vanished_td = _vanished(baseline_td)
+    # one entry per drift baseline passed: (baseline, current-side
+    # builder, check, its thresholds from the merged spec, vanished ids)
+    drift = [
+        (base, current, check, {k: spec[section][k] for k in keys}, _vanished(base))
+        for base, current, check, section, keys in (
+            (
+                baseline_hist,
+                lambda d: baseline_histogram(d, spec),
+                C.check_distribution_drift,
+                "distribution_drift",
+                ("ks_threshold", "chi2_per_bin_threshold"),
+            ),
+            (baseline_td, baseline_tdigest, C.check_quantile_drift, "quantile_drift", ("ks_threshold",)),
+            (
+                baseline_kinds,
+                baseline_kind_counts,
+                C.check_categorical_drift,
+                "categorical_drift",
+                ("chi2_per_category_threshold",),
+            ),
+        )
+        if base is not None and batches
+    ]
 
     executed = 0
     try:
@@ -250,58 +263,21 @@ def run_validation(
             )
             verdicts = uq_v.unionByName(ri_v)
             violations = uq_viol.unionByName(ri_viol)
-            if baseline_hist is not None:
-                d = spec["distribution_drift"]
-                curr_hist = numeric_histogram(
-                    _offsets_view(subset), "off", d["lo"], d["hi"], d["nbins"], ["partition_id"]
-                )
-                dd_v = C.check_distribution_drift(
-                    baseline_hist,
-                    curr_hist,
-                    run_id,
-                    epoch,
-                    ks_threshold=d["ks_threshold"],
-                    chi2_per_bin_threshold=d["chi2_per_bin_threshold"],
-                ).filter(
-                    F.col("partition_id").isin(
-                        batch_ids + (vanished_hist if executed == 0 else [])
+            for base, current, check, thresholds, vanished in drift:
+                own = batch_ids + (vanished if executed == 0 else [])
+                verdicts = verdicts.unionByName(
+                    check(base, current(subset), run_id, epoch, **thresholds).filter(
+                        F.col("partition_id").isin(own)
                     )
                 )
-                verdicts = verdicts.unionByName(dd_v)
-            if baseline_td is not None:
-                qd_v = C.check_quantile_drift(
-                    baseline_td,
-                    baseline_tdigest(subset),
-                    run_id,
-                    epoch,
-                    ks_threshold=spec.get("quantile_drift", {}).get("ks_threshold", 0.1),
-                ).filter(
-                    F.col("partition_id").isin(
-                        batch_ids + (vanished_td if executed == 0 else [])
-                    )
-                )
-                verdicts = verdicts.unionByName(qd_v)
-            if baseline_kinds is not None:
-                cd_v = C.check_categorical_drift(
-                    baseline_kinds,
-                    baseline_kind_counts(subset),
-                    run_id,
-                    epoch,
-                    chi2_per_category_threshold=spec.get("categorical_drift", {}).get(
-                        "chi2_per_category_threshold", 10.0
-                    ),
-                ).filter(
-                    F.col("partition_id").isin(
-                        batch_ids + (vanished_kinds if executed == 0 else [])
-                    )
-                )
-                verdicts = verdicts.unionByName(cd_v)
 
             # writes first, manifest commit last (write-ahead ordering); the
             # four outputs are independent → submit as concurrent Spark jobs
             # (the scheduler interleaves their stages across the cluster, so
             # per-job fixed costs and scans overlap instead of serializing).
-            # Each write is dynamic-partition-OVERWRITE keyed by the stable
+            # Each write is dynamic-partition-OVERWRITE (a writer option:
+            # the shared session's conf is never touched, so concurrent
+            # calls cannot reset each other's mode) keyed by the stable
             # identity of the rows (run/snapshot + partition_id): a batch
             # whose writes landed but whose manifest commit did not (crash in
             # between) is simply re-written in place on resume — readers
@@ -325,29 +301,22 @@ def run_validation(
                 (verdicts, f"{out_dir}/verdicts", ["run_id", "partition_id"]),
                 (violations, f"{out_dir}/violations", ["run_id", "partition_id"]),
             ]
-            prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            write_ok = False
             try:
                 with ThreadPoolExecutor(max_workers=len(targets)) as pool:
                     list(
                         pool.map(
                             lambda t: t[0].write.mode("overwrite")
+                            .option("partitionOverwriteMode", "dynamic")
                             .partitionBy(*t[2])
                             .parquet(t[1]),
                             targets,
                         )
                     )
-                write_ok = True
-            finally:
-                if prev_mode is not None:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-                else:
-                    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-                if not write_ok:
-                    # a failed write must not leak the persisted profile
-                    # frame into a caller's retry loop
-                    profiles.unpersist()
+            except BaseException:
+                # a failed write must not leak the persisted profile
+                # frame into a caller's retry loop
+                profiles.unpersist()
+                raise
 
             if (
                 crash_after_write

@@ -34,17 +34,12 @@ PENDING_DELETION = frozenset(
         "operators/classify.py",
         "operators/cleaning.py",
         "operators/dedup.py",
-        "operators/incremental.py",
         "operators/layout.py",
-        "operators/multimodal.py",
         "operators/packing.py",
         "operators/quantize.py",
         "operators/resample.py",
         "operators/sampling.py",
         "operators/substring.py",
-        "streaming/__init__.py",
-        "streaming/epochs.py",
-        "streaming/stateful.py",
     }
 )
 

@@ -251,10 +251,10 @@ def test_salted_uniqueness_agg_is_balanced(spark):
 
 
 def test_bucketed_uniqueness_agg_zero_exchange(spark):
-    """spec opt-in 'bucketed': over a table bucketed on the key,
-    duplicate_keys aggregates with ZERO Exchange (the write-time shuffle
-    is amortized) and finds exactly the same duplicates as the salted
-    path over the same rows."""
+    """Over a table bucketed on the key, duplicate_keys' default one-phase
+    aggregation runs with ZERO Exchange (the write-time shuffle is
+    amortized) and finds exactly the same duplicates as the salted path
+    over the same rows."""
     import uuid
 
     from schema_drift_detector_spark.operators.constraints import duplicate_keys
@@ -269,13 +269,13 @@ def test_bucketed_uniqueness_agg_zero_exchange(spark):
     write_bucketed(df, tname, "doc_id", 8)
     try:
         bucketed = spark.table(tname)
-        dups = duplicate_keys(bucketed, "doc_id", assume_bucketed=True)
+        dups = duplicate_keys(bucketed, "doc_id")
         plan = _plan(dups)
         assert "Exchange" not in plan, plan
         got = {r.doc_id: r.n_occurrences for r in dups.collect()}
         ref = {
             r.doc_id: r.n_occurrences
-            for r in duplicate_keys(bucketed, "doc_id").collect()
+            for r in duplicate_keys(bucketed, "doc_id", 16).collect()
         }
         assert got == ref == {"DUP": 50}
     finally:

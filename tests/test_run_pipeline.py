@@ -87,6 +87,37 @@ def test_epoch_sequence_drift_decisions(spark, docs0, catalog, tmp_path_factory)
     # notification fired on breaking drift (R22 message shape)
     assert env2["notification"]["sent"] is True
     assert env2["notification"]["message"].startswith("Schema Drift Detected! Severity: critical.")
+    # later runs into the same out_dir leave the first run's rows alone:
+    # 8 partitions x (uniqueness, referential_integrity)
+    assert read_verdicts(spark, out, "s0").count() == 16
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, docs0, catalog, tmp_path):
+    """The dynamic partition overwrite is a writer option: the shared
+    session's partitionOverwriteMode reads the caller's value for the
+    whole call, so one call on a session cannot reset the mode under
+    another call's writes."""
+    import threading
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    seen = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            done.wait(0.01)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        run_validation(spark, docs0, catalog, str(tmp_path / "out"), run_id="om", epoch=0)
+    finally:
+        done.set()
+        poller.join()
+    assert seen == {before}
+    assert spark.conf.get(key) == before
 
 
 def test_resume_idempotent(spark, docs0, catalog, tmp_path_factory):
@@ -235,27 +266,32 @@ def test_categorical_drift_in_pipeline(spark, docs0, catalog, tmp_path_factory):
 
 
 def test_vanished_partition_fails_in_pipeline(spark, docs0, catalog, tmp_path_factory):
-    """A partition present in the drift baseline but absent from the
-    current table must still get its fail-closed verdict — the per-batch
-    partition filter must not swallow it."""
-    from schema_drift_detector_spark.plans.run import baseline_kind_counts
+    """A partition present in a drift baseline but absent from the
+    current table must still get its fail-closed verdict from each of
+    the three drift checks — the per-batch partition filter must not
+    swallow it."""
+    from schema_drift_detector_spark.plans.run import (
+        DEFAULT_SPEC,
+        baseline_kind_counts,
+        baseline_tdigest,
+    )
 
     out = str(tmp_path_factory.mktemp("run_vanish"))
     current = docs0.filter(F.col("partition_id") != 6)  # partition 6 vanishes
     run_validation(
         spark, current, catalog, out, run_id="vz", epoch=1,
-        baseline_kinds=baseline_kind_counts(docs0), partition_batches=3,
+        baseline_hist=baseline_histogram(docs0, DEFAULT_SPEC),
+        baseline_td=baseline_tdigest(docs0),
+        baseline_kinds=baseline_kind_counts(docs0),
+        partition_batches=3,
     )
-    cd = {
-        r.partition_id: r
-        for r in read_verdicts(spark, out, "vz")
-        .filter("constraint = 'categorical_drift'")
-        .collect()
-    }
-    assert set(cd) == set(range(8))  # 7 live + the vanished one
-    assert cd[6].passed is False
-    assert "missing baseline or current data" in cd[6].summary
-    assert all(cd[p].passed for p in range(8) if p != 6)
+    verdicts = read_verdicts(spark, out, "vz").collect()
+    for constraint in ("distribution_drift", "quantile_drift", "categorical_drift"):
+        by = {r.partition_id: r for r in verdicts if r.constraint == constraint}
+        assert set(by) == set(range(8)), constraint  # 7 live + the vanished one
+        assert by[6].passed is False, constraint
+        assert "missing baseline or current" in by[6].summary, constraint
+        assert all(by[p].passed for p in range(8) if p != 6), constraint
 
 
 def test_categorical_drift_fails_closed_on_missing_baseline(spark, docs0):
@@ -400,6 +436,17 @@ def test_snapshot_durable_before_outputs_and_resume_reuses_id(
     run_dir = f"{out}/profiles/run_id=wa"
     sid_dirs = {d for d in os.listdir(run_dir) if d.startswith("snapshot_id=")}
     assert sid_dirs == {f"snapshot_id={sid}"}
+    # the written layout is the one FIXTURES.md F5 documents
+    assert set(spark.read.parquet(f"{out}/profiles").columns) == {
+        "run_id", "snapshot_id", "partition_id", "entity", "epoch", "column",
+        "ordinal", "dtype", "nullable", "n_rows", "null_ratio", "min_val",
+        "max_val", "approx_distinct", "hll_sketch",
+    }
+    assert set(spark.read.parquet(f"{out}/span_profiles").columns) == {
+        "run_id", "partition_id", "epoch", "n_spans", "n_text_null", "n_text",
+        "text_null_ratio", "offset_min", "offset_max",
+        "approx_distinct_media_ref", "media_ref_hll", "kind_histogram",
+    }
 
 
 def _parquet_docs(spark, docs0, path):
