@@ -1,5 +1,5 @@
 """Vector similarity — expression forms (F.zip_with + F.aggregate) and
-the Arrow-vectorized cosine used in ANN/dedup hot paths.
+the Arrow-vectorized cosine used in the ANN hot paths.
 
 Why two tiers: Catalyst's higher-order array functions (transform /
 zip_with / aggregate) are NOT whole-stage-codegen'd — they evaluate

@@ -37,8 +37,8 @@ def token_count(text: Column | str) -> Column:
 
 
 # GPT-2-style pre-tokenization, restricted to the Java-regex ∩ RE2
-# dialect (the functions/pii.py discipline — no lookaround, both
-# engines are leftmost-first here): English contractions split off,
+# dialect (no lookaround, no backreferences; both engines are
+# leftmost-first here): English contractions split off,
 # Unicode letter runs, digit runs chunked in THREES (the GPT-3.5+
 # number tokenization), punctuation/symbol runs, lone apostrophes.
 # Whitespace is a separator, not a token (real BPE keeps leading

@@ -2,8 +2,8 @@
 documents (boilerplate headers/footers/licenses) from otherwise-unique
 docs.
 
-Document-granular dedup (exact md5, MinHash/LSH, SimHash, SemDeDup —
-operators.dedup) cannot catch a UNIQUE document carrying a duplicated
+Document-granular dedup (exact md5, MinHash/LSH, SimHash, SemDeDup)
+cannot catch a UNIQUE document carrying a duplicated
 footer: the doc as a whole is not a near-dup of anything, yet a shared
 license block repeated across 10^8 pages is exactly the memorization
 hazard substring dedup exists for (the "exact substring" pass of

@@ -1,9 +1,9 @@
-"""Hypothesis cross-engine properties for the session-5 SQL builders:
-DuckDB replays of the temperature-quota rule, the CMS sketch, and the
-NB smoothing arithmetic must agree with pure-python references over
-randomized inputs. Spark-free (the Spark sides are covered by the
-certified entries and the per-operator tests) — these pin the BUILDER
-half of each cross-engine contract cheaply and widely."""
+"""Hypothesis cross-engine properties for the SQL builders: DuckDB
+replays of the temperature-quota rule and the CMS sketch must agree
+with pure-python references over randomized inputs. Spark-free (the
+Spark sides are covered by the certified entries and the per-operator
+tests) — these pin the BUILDER half of each cross-engine contract
+cheaply and widely."""
 
 import math
 
@@ -97,83 +97,3 @@ def test_cms_builder_duckdb_matches_python(keys, depth, width):
     for k in keys:
         counts[k] = counts.get(k, 0) + 1
     assert all(got[k] >= n for k, n in counts.items())  # never undercounts
-
-
-@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(
-        st.tuples(
-            st.lists(
-                st.text(
-                    alphabet=st.characters(min_codepoint=97, max_codepoint=102),
-                    min_size=1,
-                    max_size=3,
-                ),
-                min_size=0,
-                max_size=8,
-            ),
-            st.sampled_from(["a", "b"]),
-        ),
-        min_size=2,
-        max_size=12,
-    ).filter(lambda rows: len({lab for _t, lab in rows}) == 2)
-)
-def test_nb_builder_duckdb_matches_python(rows):
-    """nb_sql_ctes over random tiny corpora == the pure-python NB rule
-    (all docs are train docs here — train_pred TRUE)."""
-    from schema_drift_detector_spark.operators.classify import nb_sql_ctes
-
-    B, ALPHA = 16, 0.5
-    classes = ["a", "b"]
-    docs = [(i, " ".join(toks) if toks else None, lab) for i, (toks, lab) in enumerate(rows)]
-
-    def bucket(t):
-        return portable_hash60_py(t + ":nb") % B
-
-    pr = {c: 0 for c in classes}
-    cnt = {c: {} for c in classes}
-    tot = {c: 0 for c in classes}
-    for _i, text, lab in docs:
-        pr[lab] += 1
-        for t in (text or "").split(" "):
-            if t:
-                cnt[lab][bucket(t)] = cnt[lab].get(bucket(t), 0) + 1
-                tot[lab] += 1
-    exp = {}
-    for i, text, _lab in docs:
-        toks = [t for t in (text or "").split(" ") if t]
-        if not toks:
-            exp[i] = (None, None, None)
-            continue
-        sc = {}
-        for c in classes:
-            s = math.log(pr[c] / len(docs))
-            for t in toks:
-                s += math.log((cnt[c].get(bucket(t), 0) + ALPHA) / (tot[c] + ALPHA * B))
-            sc[c] = round(s, 5)
-        best = max(sc.values())
-        pred = min(c for c in classes if sc[c] == best)
-        runner = max(v for c, v in sc.items() if c != pred)
-        exp[i] = (pred, best, round(best - runner, 5))
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE TABLE src AS SELECT doc_id, CAST(text AS VARCHAR) AS text, label "
-        "FROM (VALUES {}) t(doc_id, text, label)".format(
-            ", ".join(
-                "({}, {}, '{}')".format(
-                    i, "NULL" if text is None else "'" + text + "'", lab
-                )
-                for i, text, lab in docs
-            )
-        )
-    )
-    got = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.sql(
-            "WITH "
-            + nb_sql_ctes("n_", "src", classes, "TRUE", n_buckets=B, alpha=ALPHA)
-            + " SELECT * FROM n_out"
-        ).fetchall()
-    }
-    assert got == exp

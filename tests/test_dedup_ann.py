@@ -1,9 +1,9 @@
-"""Dedup + similarity-search operators on the driver-provided testdata
-(planted near-duplicates in documents; 64-dim embeddings)."""
+"""ANN and similarity-search operators on the sf0.001 fixture's 64-dim
+embeddings: brute-force and IVF top-k, k-means centroids, and the
+cosine / L2 expression forms."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from schema_drift_detector_spark.operators.ann import (
@@ -12,110 +12,13 @@ from schema_drift_detector_spark.operators.ann import (
     topk_bruteforce,
     topk_ivf,
 )
-from schema_drift_detector_spark.operators.dedup import (
-    embedding_near_duplicates,
-    exact_duplicates,
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash_near_duplicates,
-)
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.read.parquet(f"{SF}/events.parquet").cache()
-
-
-@pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-def test_exact_duplicates_props(spark, events):
-    dups = exact_duplicates(events, "event_id", "props")
-    rows = dups.collect()
-    # verify each reported group really has identical props
-    if rows:
-        fp = rows[0].fingerprint
-        group = events.select(F.md5("props").alias("f"), "props").filter(F.col("f") == fp)
-        assert group.select("props").distinct().count() == 1
-    # cross-check count against a direct groupBy
-    direct = events.groupBy("props").count().filter("count > 1").count()
-    assert dups.count() == direct
-
-
-def test_ngram_jaccard_finds_planted_neardups(spark, docs):
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.8)
-    rows = pairs.collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r.doc_a < r.doc_b
-        assert 0.8 <= r.jaccard <= 1.0
-
-
-def test_minhash_estimates_track_exact_jaccard(spark, docs):
-    exact = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", 5, 0.7).collect()
-    }
-    est = {
-        (r.doc_a, r.doc_b): r.est_jaccard
-        for r in minhash_near_duplicates(
-            docs, "doc_id", "text", n=5, k=128, bands=32, threshold=0.5
-        ).collect()
-    }
-    assert len(est) > 0
-    # every strongly-similar exact pair is found by LSH, estimate within 0.2
-    found = 0
-    for pair, j in exact.items():
-        if j >= 0.9:
-            assert pair in est, f"LSH missed strong pair {pair} (j={j})"
-            assert abs(est[pair] - j) < 0.2
-            found += 1
-    assert found > 0
-
-
-def test_simhash_near_duplicates(spark, docs):
-    pairs = simhash_near_duplicates(docs, "doc_id", "text", max_hamming=8).collect()
-    assert len(pairs) > 0
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", 5, 0.9).collect()
-    }
-    simpairs = {(r.doc_a, r.doc_b) for r in pairs}
-    # near-identical texts must collide in simhash space
-    assert len(exact & simpairs) > 0
-
-
-def test_embedding_near_duplicates_lsh_vs_exact(spark, emb):
-    exact = {
-        (r.doc_a, r.doc_b): r.cos_sim
-        for r in embedding_near_duplicates(emb, "vec_id", "embedding", 0.95).collect()
-    }
-    lsh = {
-        (r.doc_a, r.doc_b): r.cos_sim
-        for r in embedding_near_duplicates(
-            emb, "vec_id", "embedding", 0.95, n_planes=8, dim=64
-        ).collect()
-    }
-    # LSH returns a subset of exact, with identical scores where found
-    assert set(lsh) <= set(exact)
-    for p, s in lsh.items():
-        assert s == exact[p]
-
-
-def test_embedding_lsh_requires_dim(spark, emb):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="dim"):
-        embedding_near_duplicates(emb, "vec_id", "embedding", 0.95, n_planes=8)
 
 
 def test_topk_null_and_zero_vectors_never_outrank(spark, emb):
@@ -196,10 +99,10 @@ def test_kmeans_ivf_beats_stride_centroids(spark, emb):
 
 
 def test_kmeans_survives_null_element_vectors(spark):
-    """Review regression: a vector with a NULL ELEMENT (Arrow surfaces
-    it as NaN) must neither poison centroids into NaN nor silently
-    shrink k via a poisoned init pick — it is simply excluded from
-    init and training."""
+    """A vector with a NULL ELEMENT (Arrow surfaces it as NaN) must
+    neither poison centroids into NaN nor silently shrink k via a
+    poisoned init pick — it is simply excluded from init and
+    training."""
     import math
 
     from schema_drift_detector_spark.operators.ann import kmeans_centroids
@@ -215,12 +118,11 @@ def test_kmeans_survives_null_element_vectors(spark):
 
 
 def test_kmeans_zero_norm_vector_never_picked_as_init(spark):
-    """Review regression (r4): a zero-norm vector must be excluded from
-    the INIT pick, not only from the Lloyd sums — otherwise the engine
-    trains around a dead zero centroid while the SQL replay (which
-    filters zero-norm rows up front) picks a different seed and the
-    certification diverges. k valid vectors exist, so k centroids come
-    back, all unit-norm."""
+    """A zero-norm vector must be excluded from the INIT pick, not only
+    from the Lloyd sums — otherwise the engine trains around a dead zero
+    centroid while the SQL replay (which filters zero-norm rows up
+    front) picks a different seed and the certification diverges. k
+    valid vectors exist, so k centroids come back, all unit-norm."""
     import math
 
     from schema_drift_detector_spark.operators.ann import kmeans_centroids
@@ -255,72 +157,6 @@ def test_similarity_expression_forms(spark):
     assert (got[0].l2, got[0].cos) == (5.0, 0.0)
     assert (got[1].l2, got[1].cos) == (0.0, 1.0)
 
-
-def test_semantic_near_dups_ivf_recall_and_null_safety(spark):
-    """IVF-cell near-dup: multi-probe candidates recover the planted
-    high-cosine pairs exactly (near-dup pairs share a top-2 cell), and
-    null/NaN/zero/empty vectors neither pair nor poison assignment."""
-    import numpy as np
-
-    from schema_drift_detector_spark.operators.ann import kmeans_centroids
-    from schema_drift_detector_spark.operators.dedup import (
-        embedding_near_duplicates,
-        semantic_near_duplicates_ivf,
-    )
-
-    rng = np.random.default_rng(7)
-    # 4 well-separated cluster directions; 50 vectors each, plus planted
-    # near-identical pairs (tiny jitter -> cosine ~0.999)
-    bases = rng.standard_normal((4, 16))
-    rows = []
-    vid = 0
-    for b in bases:
-        for _ in range(50):
-            v = b + 0.3 * rng.standard_normal(16)
-            rows.append((vid, [float(x) for x in v])); vid += 1
-    planted = []
-    for i in range(8):
-        v = bases[i % 4] + 0.3 * rng.standard_normal(16)
-        rows.append((vid, [float(x) for x in v]))
-        rows.append((vid + 1, [float(x) for x in (v + 0.001 * rng.standard_normal(16))]))
-        planted.append((vid, vid + 1)); vid += 2
-    rows += [(vid, None), (vid + 1, []), (vid + 2, [0.0] * 16),
-             (vid + 3, [float("nan")] + [1.0] * 15)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = kmeans_centroids(emb, k=4, iters=2)
-    got = semantic_near_duplicates_ivf(emb, cents, threshold=0.99, nprobe=2)
-    pairs = {(r.doc_a, r.doc_b) for r in got.collect()}
-    assert set(planted) <= pairs, set(planted) - pairs
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in embedding_near_duplicates(
-            emb, "vec_id", "embedding", threshold=0.99, n_planes=0
-        ).collect()
-    }
-    assert pairs <= exact  # candidates are verified: no false positives
-    bad_ids = {vid, vid + 1, vid + 2, vid + 3}
-    assert not any(a in bad_ids or b in bad_ids for a, b in pairs)
-
-
-def test_semantic_near_dups_ivf_assignment_is_narrow(spark):
-    """The multi-assign stage must be a narrow mapInPandas over the scan
-    — the only Exchange in the pair plan belongs to the candidate join
-    (and its dedup), never an N x k explode/window before it."""
-    from schema_drift_detector_spark.operators.ann import kmeans_centroids
-    from schema_drift_detector_spark.operators.dedup import semantic_near_duplicates_ivf
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = kmeans_centroids(emb, k=4, iters=1)
-    pairs = semantic_near_duplicates_ivf(emb, cents, threshold=0.4, nprobe=2)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "Expand" not in plan
-    # assignment is a MapInPandas over the scan, once per join leg
-    # (Spark does not share the common subplan — same shape as the LSH
-    # signature op); no extra pandas evals beyond the cosine verify
-    assert 1 <= plan.count("MapInPandas") <= 2
-    assert plan.count("ArrowEvalPython") <= 2
-
-
 def test_cosine_arrow_mixed_width_deterministic(spark):
     """A batch mixing vector widths scores every valid same-width pair
     (per-row rule, not batch-composition-dependent); cross-width and
@@ -343,48 +179,3 @@ def test_cosine_arrow_mixed_width_deterministic(spark):
     got = {r.id: r.c for r in df.select("id", cosine_arrow("a", "b").alias("c")).collect()}
     assert got[1] == 1.0 and got[2] == 1.0
     assert got[3] is None and got[4] is None and got[5] is None
-
-
-def test_semantic_ivf_drops_wrong_dim_rows(spark):
-    """A stray different-width vector is dropped like a null by the
-    assignment fold, never crashing the stage (review r5 #2)."""
-    from schema_drift_detector_spark.operators.ann import deterministic_centroids
-    from schema_drift_detector_spark.operators.dedup import semantic_near_duplicates_ivf
-
-    # i % 8, not i == j: rows 8..19 would otherwise be ZERO vectors and
-    # the md5 centroid pick could anchor a cell on one — now a loud
-    # ValueError (the r5 suite's RuntimeWarning was exactly this)
-    rows = [(i, [float(i % 8 == j) for j in range(8)]) for i in range(20)]
-    rows += [(100, [1.0] * 8), (101, [1.0] * 8), (200, [1.0] * 11)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = deterministic_centroids(emb.filter("vec_id < 20"), 4)
-    pairs = semantic_near_duplicates_ivf(emb, cents, threshold=0.99, nprobe=2)
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    assert (100, 101) in got
-    assert not any(200 in p for p in got)
-
-
-def test_semantic_ivf_rejects_zero_norm_centroid(spark):
-    """A caller-provided zero-norm (or non-finite) centroid must fail
-    loud, not become a NaN row that silently receives no assignments
-    (ADVICE r5)."""
-    import pytest
-
-    from schema_drift_detector_spark.operators.dedup import semantic_near_duplicates_ivf
-
-    emb = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(4)]) for i in range(8)],
-        "vec_id bigint, embedding array<double>",
-    )
-    cents = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0] * 4)],
-        "centroid_id bigint, centroid_vec array<double>",
-    )
-    with pytest.raises(ValueError, match="degenerate centroid"):
-        semantic_near_duplicates_ivf(emb, cents, threshold=0.9)
-    nan_cents = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [float("nan")] * 4)],
-        "centroid_id bigint, centroid_vec array<double>",
-    )
-    with pytest.raises(ValueError, match="degenerate centroid"):
-        semantic_near_duplicates_ivf(emb, nan_cents, threshold=0.9)

@@ -1,126 +1,9 @@
-"""Gap-filling tests: survivor-keeping exact dedup and sampling."""
+"""Deterministic hash sampling: sample/split by hash, per-group caps,
+weighted and token-budget sampling, and temperature-quota mixing."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-
-from schema_drift_detector_spark.operators.dedup import drop_exact_duplicates, exact_duplicates
-
-
-def test_drop_exact_duplicates_keeps_min_id(spark):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    deduped = drop_exact_duplicates(events, "event_id", "props")
-    n_groups = events.select("props").distinct().count()
-    assert deduped.count() == n_groups
-    # survivor is min(event_id) within each content group
-    dups = {r.fingerprint: r.keep_id for r in exact_duplicates(events, "event_id", "props").collect()}
-    kept = {
-        r.f: r.event_id
-        for r in deduped.select(F.md5("props").alias("f"), "event_id").collect()
-    }
-    for fp, keep_id in dups.items():
-        assert kept[fp] == keep_id
-    # idempotent
-    assert drop_exact_duplicates(deduped, "event_id", "props").count() == n_groups
-
-
-def test_drop_exact_duplicates_null_content_keeps_one(spark):
-    """NULL-content rows group as one fingerprint and keep one survivor
-    (min id) — they must not silently vanish via a null join key."""
-    from schema_drift_detector_spark.operators.dedup import drop_exact_duplicates
-
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (3, "x"), (4, "x"), (5, "y")],
-        "doc_id long, text string",
-    )
-    out = sorted(r.doc_id for r in drop_exact_duplicates(df, "doc_id", "text").collect())
-    assert out == [1, 3, 5]
-
-
-def test_minhash_rejects_invalid_bands(spark):
-    import pytest as _pytest
-
-    from schema_drift_detector_spark.operators.dedup import minhash_near_duplicates
-
-    df = spark.createDataFrame([(1, "abcdefgh")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="bands"):
-        minhash_near_duplicates(df, "doc_id", "text", k=8, bands=16)
-    with _pytest.raises(ValueError, match="bands"):
-        minhash_near_duplicates(df, "doc_id", "text", k=64, bands=12)
-
-
-def test_simhash_chunk_validation_fails_loud(spark):
-    """Non-divisor chunk counts silently change recall — both signature
-    paths must reject them with a ValueError, not an -O-strippable
-    assert."""
-    import pytest
-
-    from schema_drift_detector_spark.operators.dedup import simhash_near_duplicates
-
-    df = spark.createDataFrame([("a", "xyz")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="divide 60"):
-        simhash_near_duplicates(df, "doc_id", "text", chunks=7, hash_fn="md5")
-    with pytest.raises(ValueError, match="divide 64"):
-        simhash_near_duplicates(df, "doc_id", "text", chunks=7, hash_fn="xxhash64")
-
-
-def test_connected_components_chains_and_convergence(spark):
-    """Hash-min propagation must close transitive chains (a-b, b-c, c-d
-    → one cluster named by the min), keep disjoint components apart,
-    and fail loud when max_iters is too small for the diameter."""
-    import pytest
-
-    from schema_drift_detector_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (11, 12)],
-        ["doc_a", "doc_b"],
-    )
-    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-    # driver union-find fast path (default) and distributed BSP path
-    # (forced via driver_max_edges=0) must agree exactly
-    fast = {r.doc: r.cluster for r in connected_components(pairs).collect()}
-    bsp = {
-        r.doc: r.cluster
-        for r in connected_components(pairs, driver_max_edges=0).collect()
-    }
-    assert fast == bsp == want
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(pairs, max_iters=1, driver_max_edges=0)
-
-
-def test_connected_components_one_action_per_superstep(spark):
-    """r3 verdict residual: the convergence flag is FUSED into the label
-    min-aggregation (old label rides along as __old), so a superstep is
-    ONE action — no separate old⋈new join + count job. Pinned via
-    marginal Spark jobs per extra superstep on chain graphs: AQE
-    materializes ~5 jobs per fused action; the old separate
-    join+limit+count added ~2-4 more. Regression bound: <= 5/superstep
-    (+2 absolute slack)."""
-    from schema_drift_detector_spark.operators.dedup import connected_components
-
-    sc = spark.sparkContext
-
-    def run(n_chain, group):
-        # chain 1-2-...-n: hash-min needs n supersteps (n-1 propagation
-        # + 1 quiescence observation)
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, n_chain)], ["doc_a", "doc_b"]
-        )
-        sc.setJobGroup(group, "cc-jobcount")
-        try:
-            out = {
-                r.doc: r.cluster
-                for r in connected_components(pairs, driver_max_edges=0).collect()
-            }
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert all(v == 1 for v in out.values()), out
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    j_short = run(4, "cc-short")  # 4 supersteps
-    j_long = run(7, "cc-long")  # 7 supersteps
-    assert j_long - j_short <= 5 * 3 + 2, (j_short, j_long)
 
 
 def test_hash_sampling_deterministic_and_leakage_free(spark):
@@ -167,10 +50,10 @@ def test_hash_sampling_deterministic_and_leakage_free(spark):
 
 
 def test_sample_then_split_not_degenerate(spark):
-    """Review regression: the split salt must decorrelate it from an
-    upstream hash sample on the same key — with a shared unsalted
-    bucket, a 50% sample would land 100% in 'train' (sample buckets
-    [0,500k) are a subset of train's [0,700k))."""
+    """The split salt must decorrelate it from an upstream hash sample
+    on the same key — with a shared unsalted bucket, a 50% sample would
+    land 100% in 'train' (sample buckets [0,500k) are a subset of
+    train's [0,700k))."""
     import pyspark.sql.functions as F
 
     from schema_drift_detector_spark.operators.sampling import sample_by_hash, split_by_hash
@@ -207,7 +90,7 @@ def test_cap_per_group_deterministic_quota(spark):
     assert a == b == c  # parallelism- and input-order-independent
 
     # null-key rows pass through unchanged, exempt from the quota
-    # (ADVICE r3: a balancing op must not delete rows outside its rule)
+    # (a balancing op must not delete rows outside its rule)
     with_nulls = df.unionByName(
         spark.range(5).select(
             F.lit(None).cast("string").alias("k"), F.lit(3).alias("g")
@@ -221,7 +104,7 @@ def test_cap_per_group_deterministic_quota(spark):
 def test_cap_per_group_nested_map_column(spark):
     """xxhash64 rejects MapType RECURSIVELY: a null-key spread over a
     frame carrying array<map<...>> must skip that column instead of
-    failing at analysis time (ADVICE r5)."""
+    failing at analysis time."""
     import pyspark.sql.functions as F
 
     from schema_drift_detector_spark.operators.sampling import cap_per_group
@@ -335,50 +218,6 @@ def test_take_token_budget_null_and_negative_tokens(spark):
     with pytest.raises(Exception, match="negative token count"):
         take_token_budget(neg, "source", "doc_id", "nt", 400).count()
 
-
-def test_exact_duplicates_best_survivor_rules(spark):
-    """Ranked survivor: max priority wins (desc default), min with
-    ascending=True, NULL priority ranks lowest in BOTH directions,
-    ties fall back to min id; numeric-id precondition fails loud."""
-    import pytest
-
-    from schema_drift_detector_spark.operators.dedup import exact_duplicates_best
-
-    rows = [
-        # group "a": priorities 1/3/NULL -> desc keeps 12, asc keeps 10
-        (10, "a", 1.0),
-        (12, "a", 3.0),
-        (14, "a", None),
-        # group "b": all-NULL priorities -> min id both directions
-        (20, "b", None),
-        (22, "b", None),
-        # group "c": tied priorities -> min id
-        (30, "c", 7.0),
-        (31, "c", 7.0),
-        # singleton: filtered out (n_docs > 1)
-        (40, "d", 9.0),
-    ]
-    df = spark.createDataFrame(rows, "id long, content string, p double")
-    desc = {
-        r.fingerprint: (r.n_docs, r.keep_id)
-        for r in exact_duplicates_best(df, "id", "content", F.col("p")).collect()
-    }
-    asc = {
-        r.fingerprint: r.keep_id
-        for r in exact_duplicates_best(
-            df, "id", "content", F.col("p"), ascending=True
-        ).collect()
-    }
-    import hashlib
-
-    fp = {k: hashlib.md5(k.encode()).hexdigest() for k in "abc"}
-    assert desc[fp["a"]] == (3, 12) and asc[fp["a"]] == 10
-    assert desc[fp["b"]] == (2, 20) and asc[fp["b"]] == 20
-    assert desc[fp["c"]] == (2, 30) and asc[fp["c"]] == 30
-    assert len(desc) == 3  # singleton dropped
-    sdf = spark.createDataFrame([("x", "a", 1.0)], "id string, content string, p double")
-    with pytest.raises(ValueError, match="numeric id"):
-        exact_duplicates_best(sdf, "id", "content", F.col("p"))
 
 def _py_temperature_quotas(sizes: dict, total: int, alpha: float, min_quota: int = 1):
     """Pure-python reference of the temperature quota rule. Rounding is

@@ -27,13 +27,10 @@ PENDING_DELETION = frozenset(
     {
         "functions/cms.py",
         "functions/normalize.py",
-        "functions/pii.py",
         "functions/similarity.py",
         "functions/text.py",
         "operators/ann.py",
-        "operators/classify.py",
         "operators/cleaning.py",
-        "operators/dedup.py",
         "operators/layout.py",
         "operators/packing.py",
         "operators/quantize.py",
