@@ -27,13 +27,10 @@ PENDING_DELETION = frozenset(
     {
         "functions/cms.py",
         "functions/normalize.py",
-        "functions/similarity.py",
         "functions/text.py",
-        "operators/ann.py",
         "operators/cleaning.py",
         "operators/layout.py",
         "operators/packing.py",
-        "operators/quantize.py",
         "operators/resample.py",
         "operators/sampling.py",
         "operators/substring.py",

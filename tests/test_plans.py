@@ -64,14 +64,6 @@ def test_histogram_has_partial_aggregation(spark, docs_path):
     assert plan.count("Exchange") == 1
 
 
-def test_ann_broadcasts_queries(spark):
-    from schema_drift_detector_spark.operators.ann import topk_bruteforce
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    top = topk_bruteforce(emb, emb.filter("vec_id < 3"), k=3)
-    assert "Broadcast" in _plan(top)
-
-
 def test_catalog_broadcast_in_ri(spark, docs_path):
     from schema_drift_detector_spark.operators.constraints import check_referential_integrity
 
@@ -93,22 +85,6 @@ def test_diff_is_pure_jvm_single_join(spark):
     assert "FullOuter" in plan
     assert "EvalPython" not in plan  # no BatchEvalPython / ArrowEvalPython
     assert plan.count("Join") == 1
-
-
-def test_centroid_pick_avoids_global_sort(spark):
-    """deterministic_centroids must plan as TakeOrderedAndProject (per-task
-    local top-k, driver merge) — NOT a global sort / single-partition window
-    over the corpus, which was the round-1 scale-killer at 10^9 vectors."""
-    from schema_drift_detector_spark.operators.ann import deterministic_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = _plan(deterministic_centroids(emb, 8))
-    assert "TakeOrderedAndProject" in plan
-    # the only rangepartitioning/sort allowed is over the already-limited k
-    # rows (after TakeOrderedAndProject); the corpus scan itself must feed
-    # the top-k directly with no Exchange below it
-    scan_side = plan.split("TakeOrderedAndProject")[-1]
-    assert "Exchange" not in scan_side
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
@@ -158,33 +134,6 @@ def test_ri_shuffle_join_fallback(spark, docs_path):
         assert a == b
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_kmeans_iteration_shuffles_only_partials(spark):
-    """One Lloyd iteration must shuffle ONLY the per-task partial rows
-    (centroid_id, psum, pcount) — not the corpus vectors, and never
-    exploded (cell, dim) rows (the round-2 formulation shuffled N x dim
-    rows per iteration: ~10^12 at 10^9 x 768-dim)."""
-    import numpy as np
-
-    from schema_drift_detector_spark.functions.similarity import normalize
-    from schema_drift_detector_spark.operators.ann import _lloyd_iteration
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v = emb.select(normalize("embedding").alias("nv"))
-    dim = len(emb.select("embedding").first()[0])
-    step = _lloyd_iteration(v, np.eye(4, dim), [0, 1, 2, 3])
-    plan = _plan(step)
-    # no explode of vectors into (cell, dim) rows anywhere in the plan
-    assert "Generate" not in plan and "posexplode" not in plan
-    # exactly one Exchange, and it hashes the partials on centroid_id —
-    # everything below it (the corpus scan + fused assign/partial-sum
-    # mapInPandas) runs shuffle-free
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert len(exchanges) == 1, plan
-    assert "hashpartitioning(centroid_id" in exchanges[0], exchanges[0]
-    below = plan.split("Exchange")[-1]
-    assert "MapInPandas" in below and "Scan parquet" in below, plan
 
 
 def _task_stats(spark, fn):
@@ -280,34 +229,6 @@ def test_bucketed_uniqueness_agg_zero_exchange(spark):
         assert got == ref == {"DUP": 50}
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
-
-
-def test_kmeans_iteration_shuffle_volume(spark):
-    """Measured (not just plan-shape) evidence for the trainer rewrite:
-    one Lloyd iteration's total shuffle-write records must be bounded by
-    partials (tasks x k), which is >=4x fewer rows than the N x dim
-    exploded rows the round-2 formulation shuffled."""
-    import numpy as np
-
-    from schema_drift_detector_spark.functions.similarity import normalize
-    from schema_drift_detector_spark.operators.ann import _lloyd_iteration
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v = emb.select(normalize("embedding").alias("nv"))
-    n = emb.count()
-    dim = len(emb.select("embedding").first()[0])
-    k = 8
-    step = _lloyd_iteration(v, np.eye(k, dim), list(range(k)))
-    stats = _task_stats(
-        spark, lambda: step.write.format("noop").mode("overwrite").save()
-    )
-    shuffled = sum(sum(s["writes"]) for s in stats)
-    # bound by the WRITING (map) stage's task count — the reducer stage
-    # can have more tasks and would loosen the partials bound
-    writers = [s for s in stats if sum(s["writes"]) > 0]
-    n_tasks = max(len(s["durations"]) for s in writers)
-    assert 0 < shuffled <= n_tasks * k, (shuffled, n_tasks, k)
-    assert n * dim >= 4 * shuffled, f"want >=4x fewer than N*dim: {shuffled} vs {n * dim}"
 
 
 def test_choose_salt_buckets_decision_and_unsalted_plan(spark):

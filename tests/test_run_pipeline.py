@@ -3,12 +3,15 @@ violations, manifest resume idempotence, policy decisions."""
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
 
 from schema_drift_detector_spark.plans import manifest as M
+from schema_drift_detector_spark.plans import records, store
 from schema_drift_detector_spark.plans.run import (
     baseline_histogram,
     read_verdicts,
@@ -447,6 +450,79 @@ def test_snapshot_durable_before_outputs_and_resume_reuses_id(
         "text_null_ratio", "offset_min", "offset_max",
         "approx_distinct_media_ref", "media_ref_hll", "kind_histogram",
     }
+
+
+def _verdict_rows(spark, out, run_id):
+    """The run's verdicts as sorted ((constraint, partition_id), (passed,
+    summary)) pairs; a duplicated row shows up as a repeated key."""
+    return sorted(
+        ((r.constraint, r.partition_id), (r.passed, r.summary))
+        for r in read_verdicts(spark, out, run_id).collect()
+    )
+
+
+def _violation_counts(spark, out, run_id):
+    return {
+        (r.constraint, r.partition_id): r["count"]
+        for r in read_violations(spark, out, run_id)
+        .groupBy("constraint", "partition_id").count().collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, docs0, catalog, tmp_path_factory):
+    """Verdict rows and violation counts of one uninterrupted run over docs0."""
+    out = str(tmp_path_factory.mktemp("run_uninterrupted"))
+    run_validation(spark, docs0, catalog, out, run_id="un", epoch=0)
+    return _verdict_rows(spark, out, "un"), _violation_counts(spark, out, "un")
+
+
+def test_crash_after_snapshot_before_any_output(spark, docs0, catalog, uninterrupted, tmp_path_factory):
+    """A crash after the snapshot record is durable and before the first
+    batch leaves that record and nothing else. The resume reuses the
+    record as written and validates every partition."""
+    out = str(tmp_path_factory.mktemp("run_snap_only"))
+    run_validation(
+        spark, docs0, catalog, out, run_id="so", epoch=0,
+        partition_batches=2, fail_after_batches=0,
+    )
+    snaps = store.read_snapshots(spark, f"{out}/store")
+    assert [s["source_path"] for s in snaps] == ["so"]
+    assert M.read_commits(spark, out, "so") == []
+    assert not os.path.exists(f"{out}/verdicts")
+
+    env = run_validation(spark, docs0, catalog, out, run_id="so", epoch=0, partition_batches=2)
+    assert env["run"]["partitions_pending_before"] == list(range(8))
+    # one record for the run, neither rewritten nor joined by a second
+    assert store.read_snapshots(spark, f"{out}/store") == snaps
+    rows = _verdict_rows(spark, out, "so")
+    assert len(rows) == len({k for k, _ in rows}) == 16
+    assert rows == uninterrupted[0]
+
+
+def test_commit_temp_file_before_rename_is_rerun(spark, docs0, catalog, uninterrupted, tmp_path_factory):
+    """A crash between a commit record's temp write and its rename leaves
+    a hidden ``.<name>.<hex>.tmp`` file that claims the batch's
+    partitions as done. It is not a commit: the resume re-runs exactly
+    those partitions and ends where an uninterrupted run ends."""
+    out = str(tmp_path_factory.mktemp("run_tmp_commit"))
+    run_validation(
+        spark, docs0, catalog, out, run_id="tc", epoch=0,
+        partition_batches=2, fail_after_batches=1,
+    )
+    pending = M.pending_partitions(spark, docs0.select("partition_id"), out, "tc")
+    assert len(pending) == 4
+    (done,) = M.read_commits(spark, out, "tc")
+    claim = {**done, "partitions": [{**done["partitions"][0], "partition_id": p} for p in pending]}
+    tmp = f"{M.run_path(out, 'tc')}/.{records.unique_name()}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(claim, f)
+
+    env = run_validation(spark, docs0, catalog, out, run_id="tc", epoch=0, partition_batches=2)
+    assert env["run"]["partitions_pending_before"] == pending
+    assert _verdict_rows(spark, out, "tc") == uninterrupted[0]
+    assert _violation_counts(spark, out, "tc") == uninterrupted[1]
+    assert M.pending_partitions(spark, docs0.select("partition_id"), out, "tc") == []
 
 
 def _parquet_docs(spark, docs0, path):
