@@ -10,15 +10,20 @@ paths use the raw local file system, which writes no ``.crc`` side
 files.
 
 A record is written once and never rewritten: its bytes go to a hidden
-temp name, then the temp file is renamed to the final name. Callers
-pick final names that never collide, so a record exists iff it was
-written whole. Readers skip hidden names (leading ``.`` or ``_``), the
-Hadoop convention for in-progress files.
+temp name, then the temp file is published under the final name by a
+step that refuses an existing name, so a record exists iff it was
+written whole and a second write of a name raises. On the local file
+system that step is link(2), which fails with EEXIST where rename(2)
+would replace; on HDFS it is ``rename``, which fails on an existing
+target. Object stores (S3A and the like) emulate rename by copy and are
+not verified here. Readers skip hidden names (leading ``.`` or ``_``),
+the Hadoop convention for in-progress files.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 from typing import Any
@@ -55,7 +60,9 @@ def unique_name() -> str:
 
 def write_record(spark: SparkSession, directory: str, name: str, record: dict[str, Any]) -> None:
     """Write ``record`` as ``directory/name``: temp file first, then a
-    rename, so the final name appears only with its whole content."""
+    no-replace publish, so the final name appears only with its whole
+    content. Raises ``FileExistsError`` (local) or ``OSError`` (HDFS)
+    when the name exists; the temp file is removed either way."""
     jvm = spark._jvm
     fs, jdir = _fs(spark, directory)
     final = jvm.org.apache.hadoop.fs.Path(jdir, name)
@@ -66,7 +73,13 @@ def write_record(spark: SparkSession, directory: str, name: str, record: dict[st
         out.write(bytearray(data))
     finally:
         out.close()
-    if not fs.rename(tmp, final):
+    if fs.getUri().getScheme() == "file":  # RawLocalFileSystem has no getScheme()
+        tmp_path = fs.pathToFile(tmp).getAbsolutePath()
+        try:
+            os.link(tmp_path, fs.pathToFile(final).getAbsolutePath())
+        finally:
+            os.unlink(tmp_path)
+    elif not fs.rename(tmp, final):
         fs.delete(tmp, False)
         raise OSError(f"could not publish record {directory}/{name}")
 

@@ -154,6 +154,23 @@ def run_validation(
 
     _check_layout(spark, out_dir)
 
+    # ---- partition universe (a read; before the first write) ----------
+    # a run over file-backed input records its input fingerprint and
+    # partition universe with its first commit; a resume checks the
+    # fingerprint and reuses the universe instead of scanning for it. A
+    # null partition_id belongs to no batch, so it is refused here,
+    # before the snapshot record is written (FIXTURES.md F1)
+    fingerprint = input_fingerprint(docs)
+    universe = M.resume_universe(spark, out_dir, run_id, fingerprint)
+    run_input = None
+    if universe is None:
+        ids = [r.partition_id for r in docs.select("partition_id").distinct().collect()]
+        if None in ids:
+            raise ValueError(f"run {run_id}: column partition_id holds a null")
+        universe = sorted(ids)
+        if fingerprint is not None:
+            run_input = {"fingerprint": fingerprint, "universe": universe}
+
     # ---- schema snapshot + drift detection (driver-side records) --------
     # write-ahead order: the snapshot record is durable before any
     # snapshot_id-keyed output (profile dirs) and before any commit; a
@@ -166,7 +183,8 @@ def run_validation(
     )
     if needs_persist:
         store.persist_snapshot(
-            spark, store_dir, entity, epoch, fields, source_path=run_id, snapshot_id=snapshot_id
+            spark, store_dir, entity, epoch, fields,
+            source_path=run_id, snapshot_id=snapshot_id, previous_snapshot_id=prev_id,
         )
     before = store.fields_of(spark, store_dir, prev_id) if prev_id else []  # first snapshot → all adds
     report = diff_field_lists(before, fields)
@@ -178,16 +196,6 @@ def run_validation(
     }
 
     # ---- partition plan with resume ------------------------------------
-    # a run over file-backed input records its input fingerprint and
-    # partition universe with its first commit; a resume checks the
-    # fingerprint and reuses the universe instead of scanning for it
-    fingerprint = input_fingerprint(docs)
-    universe = M.resume_universe(spark, out_dir, run_id, fingerprint)
-    run_input = None
-    if universe is None:
-        universe = sorted(r.partition_id for r in docs.select("partition_id").distinct().collect())
-        if fingerprint is not None:
-            run_input = {"fingerprint": fingerprint, "universe": universe}
     pending = M.pending_partitions(spark, universe, out_dir, run_id)
     batches = [
         pending[i :: partition_batches] for i in range(partition_batches)

@@ -4,11 +4,14 @@ infra/neo4j/init_schema.cypher:16-32).
 
 Layout (FIXTURES.md F5):
     <store>/<snapshot_id>.json   snapshot_id, entity, epoch, timestamp,
-                                 created_by, source_path and the
+                                 created_by, source_path,
+                                 previous_snapshot_id and the
                                  snapshot's FieldMeta list
-The identity and the fields land in one write, so a snapshot is either
-wholly discoverable or absent. The PREVIOUS_SNAPSHOT chain is resolved
-per call on the driver: the most recent other snapshot of the entity.
+The identity, its PREVIOUS_SNAPSHOT edge and the fields land in one
+write, so a snapshot is either wholly discoverable or absent. The edge
+is picked once, when the snapshot is persisted (the most recent other
+snapshot of the entity) and read back from the record after that, so a
+snapshot persisted between two calls of one run does not move it.
 Records are read and written through plans/records.py — no Spark job.
 """
 
@@ -37,13 +40,14 @@ def persist_snapshot(
     created_by: str = "schema_drift_detector_spark",
     source_path: str | None = None,
     snapshot_id: str | None = None,
+    previous_snapshot_id: str | None = None,
 ) -> str:
     """Write an immutable snapshot record; returns its uuid
     (≙ snapshot_persistence_agent.py:116 identity semantics).
     ``fields``: FieldMeta dicts (name, dtype, nullable, ordinal) in
-    list order. ``snapshot_id`` lets a caller that minted the id up
-    front (see resolve_snapshot_chain) persist under it; default mints
-    a fresh uuid."""
+    list order. ``snapshot_id`` and ``previous_snapshot_id`` let a
+    caller that resolved the chain up front (see resolve_snapshot_chain)
+    persist under that id and edge; default mints a fresh uuid."""
     snapshot_id = snapshot_id or new_snapshot_id()
     ensure_metadata_only({k for f in fields for k in f})
     record = {
@@ -54,6 +58,7 @@ def persist_snapshot(
         "timestamp": datetime.now(timezone.utc).isoformat(timespec="microseconds"),
         "created_by": created_by,
         "source_path": source_path,
+        "previous_snapshot_id": previous_snapshot_id,
         "fields": [{k: f.get(k) for k in FIELD_SCHEMA.fieldNames()} for f in fields],
     }
     records.write_record(spark, store_dir, _name(snapshot_id), record)
@@ -85,10 +90,13 @@ def resolve_snapshot_chain(
     one read of the store.
 
     A run reuses the snapshot it already persisted (entity, epoch and
-    source_path == run_id match), so a resumed run keeps its snapshot
-    id and the chain stays stable across interruptions. When
-    ``needs_persist`` is True the caller owns writing the snapshot via
-    persist_snapshot(..., snapshot_id=...) — and must do so before any
+    source_path == run_id match) and the previous id recorded in it, so
+    a resumed run keeps its snapshot id and its chain edge even when
+    other snapshots of the entity were persisted in between. A record
+    written before the edge was stored re-derives it as the entity's
+    latest other snapshot. When ``needs_persist`` is True the caller
+    owns writing the snapshot via persist_snapshot(..., snapshot_id=...,
+    previous_snapshot_id=...) — and must do so before any
     snapshot_id-keyed output becomes visible (write-ahead).
     """
     snaps = read_snapshots(spark, store_dir)
@@ -101,7 +109,10 @@ def resolve_snapshot_chain(
         None,
     )
     snapshot_id = existing["snapshot_id"] if existing else new_snapshot_id()
-    return snapshot_id, _latest_other(snaps, entity, snapshot_id), existing is None
+    previous = _latest_other(snaps, entity, snapshot_id)
+    if existing:
+        previous = existing.get("previous_snapshot_id", previous)
+    return snapshot_id, previous, existing is None
 
 
 def previous_snapshot(spark: SparkSession, store_dir: str, entity: str, before_id: str) -> str | None:

@@ -25,14 +25,11 @@ ENTRY_POINTS = ("plans.run", "session", "sources.io", "sources.synth")
 BENCH = ROOT.parent / "perfbench"
 PENDING_DELETION = frozenset(
     {
-        "functions/cms.py",
         "functions/normalize.py",
         "functions/text.py",
         "operators/cleaning.py",
         "operators/layout.py",
-        "operators/packing.py",
         "operators/resample.py",
-        "operators/sampling.py",
         "operators/substring.py",
     }
 )

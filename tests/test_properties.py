@@ -261,41 +261,6 @@ def test_heavy_hitters_matches_brute_force(spark, keys, phi):
     assert got == want
 
 
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 200)),
-        min_size=1,
-        max_size=150,
-    ),
-    st.integers(1, 12),
-)
-def test_cap_per_group_properties(spark, rows, max_rows):
-    """Properties of the quota: (1) no group exceeds max_rows non-null
-    survivors; (2) a group at-or-under quota keeps every row; (3) the
-    survivor set is a subset of the input and deterministic across
-    repartitioning."""
-    from collections import Counter
-
-    from schema_drift_detector_spark.operators.sampling import cap_per_group
-
-    # dedupe: the quota caps ROWS, so a duplicated (g, i) tuple would
-    # consume two slots while the distinct-count assertions below see
-    # one key — unique inputs keep rows == keys
-    data = sorted({(g, f"k-{g}-{i}") for g, i in rows})
-    df = spark.createDataFrame(data, "g int, k string")
-    out = cap_per_group(df, "g", "k", max_rows)
-    got = [(r.g, r.k) for r in out.collect()]
-    in_counts = Counter(g for g, _ in set(data))
-    out_counts = Counter(g for g, _ in set(got))
-    for g, c in out_counts.items():
-        assert c <= max_rows
-        assert c == min(in_counts[g], max_rows)
-    assert set(got) <= set(data)
-    again = {(r.g, r.k) for r in cap_per_group(df.repartition(7), "g", "k", max_rows).collect()}
-    assert set(got) == again
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     st.lists(
@@ -329,45 +294,3 @@ def test_gram_hashes64_batch_matches_scalar(tok_lists, n):
         ref = [gram_hash64_py(toks[i : i + n]) for i in range(m)]
         assert g == sorted(set(ref))
         assert p == list(range(1, m + 1)) and gh == ref
-
-
-def test_hash_sql_builders_cross_engine_parity(spark):
-    """portable_hash60_sql / hash_bucket_sql (the DuckDB replay
-    builders) must produce the SAME values as the Spark Columns they
-    mirror — evaluated in both engines over awkward strings (unicode,
-    empties, quotes-free SQL-safe forms)."""
-    import duckdb
-
-    from schema_drift_detector_spark.functions.text import (
-        portable_hash60,
-        portable_hash60_sql,
-    )
-    from schema_drift_detector_spark.operators.sampling import (
-        hash_bucket,
-        hash_bucket_sql,
-    )
-    from pyspark.sql import functions as F
-
-    vals = ["", "a", "doc-000042", "héllo wörld", "x" * 100, "42"]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    got_spark = {
-        r["s"]: (r["h"], r["b"], r["bs"])
-        for r in df.select(
-            "s",
-            portable_hash60(F.col("s")).alias("h"),
-            hash_bucket(F.col("s"), 1024).alias("b"),
-            hash_bucket(F.col("s"), 1024, salt=":p").alias("bs"),
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.sql("CREATE TABLE t(s VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
-    got_duck = {
-        r[0]: tuple(r[1:])
-        for r in con.sql(
-            f"SELECT s, {portable_hash60_sql('s')} AS h, "
-            f"{hash_bucket_sql('s', 1024)} AS b, "
-            f"{hash_bucket_sql('s', 1024, salt=':p')} AS bs FROM t"
-        ).fetchall()
-    }
-    assert got_spark == got_duck

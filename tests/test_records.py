@@ -51,3 +51,18 @@ def test_records_read_back_whole_in_write_order(spark, tmp_path):
     assert records.read_records(spark, directory) == written
     assert len(list((tmp_path / "log").glob("*.json"))) == 5
     assert list((tmp_path / "log").glob(".*")) == []
+
+
+def test_second_write_of_a_name_raises_and_keeps_the_first(spark, tmp_path):
+    """A record is written once: publishing a second record under an
+    existing name raises FileExistsError (an OSError, as HDFS's refused
+    rename is), the first record reads back unchanged, and the second
+    write leaves no temp file."""
+    directory = str(tmp_path / "log")
+    name = records.unique_name()
+    records.write_record(spark, directory, name, {"v": 1})
+    with pytest.raises(FileExistsError):
+        records.write_record(spark, directory, name, {"v": 2})
+    assert records.read_record(spark, directory, name) == {"v": 1}
+    assert records.read_records(spark, directory) == [{"v": 1}]
+    assert list((tmp_path / "log").glob(".*")) == []

@@ -642,3 +642,54 @@ def test_run_validation_plans_run_no_python(spark, tmp_path):
     for i, e in started.items():
         plan = e.physicalPlanDescription()
         assert not python_nodes.search(plan), (i, e.description(), plan)
+
+
+def test_resume_keeps_the_previous_snapshot_it_recorded(spark, catalog, tmp_path):
+    """Run A is interrupted, run B persists a newer snapshot of the same
+    entity, then A resumes. The resume diffs against the previous
+    snapshot A recorded when it started (X's), not against B's: the
+    envelope and the lineage of every A commit are as before B."""
+    cfg = SynthConfig(n_docs=800, n_partitions=4, n_assets=4_000, seed=7)
+    e0, e1, e2 = (synth_documents(spark, cfg, epoch=e) for e in (0, 1, 2))
+    out = str(tmp_path / "out")
+    env_x = run_validation(spark, e0, catalog, out, run_id="X", epoch=0)
+    x_id = env_x["details"]["snapshot_ids"]["snapshot_id"]
+
+    env_a = run_validation(
+        spark, e1, catalog, out, run_id="A", epoch=1, partition_batches=2, fail_after_batches=1
+    )
+    assert env_a["details"]["snapshot_ids"]["previous_snapshot_id"] == x_id
+    assert env_a["details"]["drift"]["drift_report"]["summary"] == "add country (low)"
+    run_validation(spark, e2, catalog, out, run_id="B", epoch=2)
+
+    resumed = run_validation(spark, e1, catalog, out, run_id="A", epoch=1, partition_batches=2)
+    assert resumed["run"]["batches_executed"] == 2  # the 2 pending partitions, one per batch
+    for key in ("snapshot_ids", "drift"):
+        assert resumed["details"][key] == env_a["details"][key]
+    lineage = [p["lineage"] for c in M.read_commits(spark, out, "A") for p in c["partitions"]]
+    assert len(lineage) == 4
+    assert {ln["previous_snapshot_id"] for ln in lineage} == {x_id}
+
+
+def test_null_partition_id_is_refused_before_any_write(spark, catalog, tmp_path):
+    """A null partition_id belongs to no batch (FIXTURES F1): the run
+    raises a ValueError naming the run and the column before its
+    snapshot record is written, so out_dir holds no record."""
+    from pyspark.sql import types as T
+
+    from schema_drift_detector_spark.model import SPAN_STRUCT
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType(), True),
+            T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
+            T.StructField("partition_id", T.IntegerType(), True),
+            T.StructField("epoch", T.IntegerType(), False),
+        ]
+    )
+    text = [("text", "hello", None, 0)]
+    docs = spark.createDataFrame([("a", text, 0, 0), ("b", text, None, 0)], schema)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="run np0: column partition_id holds a null"):
+        run_validation(spark, docs, catalog, out, run_id="np0", epoch=0)
+    assert store.read_snapshots(spark, f"{out}/store") == []
