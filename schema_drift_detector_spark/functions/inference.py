@@ -9,15 +9,11 @@ the "string" branch before the int/float branches are reached. We
 replicate the quirk deliberately: the golden crawler outputs
 (/root/reference/examples/*/csv_crawler_agent_output.json) depend on it.
 
-Provided both as a plain Python function (for driver-side snapshot
-construction) and as a Spark Column expression (JVM-side, codegen'd,
-no Python UDF) for inferring names at scale.
+A plain Python function: snapshots are built on the driver from
+column names, so no Spark expression is needed.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _DATE_TOKENS = ("date", "dob", "timestamp", "ts", "joined", "birth")
 # characters of the literal "country_code" — the reference's :30 quirk
@@ -38,26 +34,3 @@ def infer_type_from_name(col_name: str) -> str:
     if any(tok in n for tok in _FLOAT_TOKENS):
         return "float"
     return "string"
-
-
-def infer_type_expr(name_col: Column | str) -> Column:
-    """Same lattice as a Catalyst expression (whole-stage codegen).
-
-    Use when inferring types for many column names in a DataFrame
-    (e.g. a long-format snapshot of thousands of entities).
-    """
-    n = F.lower(F.col(name_col) if isinstance(name_col, str) else name_col)
-
-    def _any(tokens) -> Column:
-        cond = F.lit(False)
-        for tok in tokens:
-            cond = cond | n.contains(tok)
-        return cond
-
-    return (
-        F.when(_any(_DATE_TOKENS), F.lit("date"))
-        .when(n.endswith("_id") | (n == "id") | _any(_STRING_CHARS), F.lit("string"))
-        .when(_any(_INT_TOKENS), F.lit("int"))
-        .when(_any(_FLOAT_TOKENS), F.lit("float"))
-        .otherwise(F.lit("string"))
-    )

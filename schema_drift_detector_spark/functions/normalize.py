@@ -38,7 +38,7 @@ the Python-re ∩ RE2 common dialect (hex escapes for controls, literal
 UTF-8 characters for the space class — RE2 lacks \\uXXXX and Python
 lacks \\x{...}, so literals are the only shared spelling) and are
 interpolated into BOTH engines from the same constants, the
-gopher_metrics_ctes / gram_hash64_sql shared-builder discipline.
+gopher_metrics_ctes shared-builder discipline.
 
 Scale shape: a single zero-shuffle Arrow mapInPandas-free pandas_udf
 scan — NFC is not expressible in Catalyst, so this is the legitimate

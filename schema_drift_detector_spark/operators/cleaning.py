@@ -26,8 +26,7 @@ so a 100 TB run can audit drop rates per source before committing.
 
 NULL contract (both operators): NULL text rows are kept as rows with
 ``keep = false`` and NULL evidence where no evidence exists — never
-silently dropped, mirroring the fail-loud passthrough of
-``substring_dedup``.
+silently dropped.
 """
 
 from __future__ import annotations

@@ -128,17 +128,6 @@ def profile_columns(
     return long
 
 
-def merge_hll(profiles: DataFrame, group_cols: Sequence[str] = ("column",)) -> DataFrame:
-    """Merge persisted per-partition sketches to coarser granularity
-    (e.g. table-level distinct counts) without touching the data again.
-    This is the scale path: 10^12 docs are scanned once; every rollup
-    after that is sketch algebra on metadata rows."""
-    return profiles.groupBy(*group_cols).agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.hll_sketch_estimate(F.hll_union_agg("hll_sketch", True)).alias("distinct_merged"),
-    )
-
-
 def profile_spans(
     docs: DataFrame,
     group_cols: Sequence[str] = ("epoch", "partition_id"),

@@ -89,25 +89,25 @@ def resolve_snapshot_chain(
     """Resolve (snapshot_id, previous_snapshot_id, needs_persist) from
     one read of the store.
 
-    A run reuses the snapshot it already persisted (entity, epoch and
-    source_path == run_id match) and the previous id recorded in it, so
-    a resumed run keeps its snapshot id and its chain edge even when
-    other snapshots of the entity were persisted in between. A record
-    written before the edge was stored re-derives it as the entity's
-    latest other snapshot. When ``needs_persist`` is True the caller
-    owns writing the snapshot via persist_snapshot(..., snapshot_id=...,
-    previous_snapshot_id=...) — and must do so before any
-    snapshot_id-keyed output becomes visible (write-ahead).
+    A run reuses the snapshot it already persisted (source_path ==
+    run_id) and the previous id recorded in it, so a resumed run keeps
+    its snapshot id and its chain edge even when other snapshots of the
+    entity were persisted in between. A resume whose entity or epoch
+    differs from the recorded one raises ValueError: one run_id is one
+    snapshot. A record written before the edge was stored re-derives it
+    as the entity's latest other snapshot. When ``needs_persist`` is
+    True the caller owns writing the snapshot via persist_snapshot(...,
+    snapshot_id=..., previous_snapshot_id=...) — and must do so before
+    any snapshot_id-keyed output becomes visible (write-ahead).
     """
     snaps = read_snapshots(spark, store_dir)
-    existing = next(
-        (
-            s
-            for s in snaps
-            if s["entity"] == entity and s["epoch"] == int(epoch) and s["source_path"] == run_id
-        ),
-        None,
-    )
+    existing = next((s for s in snaps if s["source_path"] == run_id), None)
+    if existing and (existing["entity"], existing["epoch"]) != (entity, int(epoch)):
+        raise ValueError(
+            f"run {run_id} was started with entity={existing['entity']!r}, "
+            f"epoch={existing['epoch']}; this call asks for entity={entity!r}, "
+            f"epoch={int(epoch)}: start a new run_id"
+        )
     snapshot_id = existing["snapshot_id"] if existing else new_snapshot_id()
     previous = _latest_other(snaps, entity, snapshot_id)
     if existing:

@@ -26,11 +26,9 @@ BENCH = ROOT.parent / "perfbench"
 PENDING_DELETION = frozenset(
     {
         "functions/normalize.py",
-        "functions/text.py",
         "operators/cleaning.py",
         "operators/layout.py",
         "operators/resample.py",
-        "operators/substring.py",
     }
 )
 

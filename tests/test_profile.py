@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from schema_drift_detector_spark.operators.profile import (
-    merge_hll,
     numeric_histogram,
     profile_columns,
     profile_spans,
@@ -38,15 +37,6 @@ def test_profile_columns_shape_and_values(spark, docs):
     # approx distinct close to exact
     exact = docs.filter("partition_id = 0").select("doc_id").distinct().count()
     assert abs(r.approx_distinct - exact) <= max(2, exact * 0.05)
-
-
-def test_hll_merge_matches_global_distinct(spark, docs):
-    prof = profile_columns(docs)
-    merged = {r["column"]: r for r in merge_hll(prof, ["column"]).collect()}
-    exact = docs.select("doc_id").distinct().count()
-    est = merged["doc_id"]["distinct_merged"]
-    assert abs(est - exact) / exact < 0.05
-    assert merged["doc_id"]["n_rows"] == CFG.n_docs
 
 
 def test_profile_spans(spark, docs):

@@ -11,7 +11,6 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from schema_drift_detector_spark.functions.inference import infer_type_from_name
 from schema_drift_detector_spark.model import FIELD_SCHEMA
 from schema_drift_detector_spark.operators.diff import diff_fields, drift_report
 
@@ -119,20 +118,6 @@ def test_hll_union_matches_repartitioned(spark):
         .collect()[0].d
     )
     assert a == b
-
-
-def test_inference_pure_python_vs_expr(spark):
-    """Column-expression inference must agree with the Python mirror."""
-    from schema_drift_detector_spark.functions.inference import infer_type_expr
-
-    samples = [
-        "name", "date_of_birth", "ts", "user_id", "id", "amount", "num_x",
-        "AGE", "zzz", "mm", "xx_id", "joined_at", "balance", "q",
-    ]
-    df = spark.createDataFrame([(s,) for s in samples], ["name"])
-    got = {r.name: r.t for r in df.select("name", infer_type_expr("name").alias("t")).collect()}
-    for s in samples:
-        assert got[s] == infer_type_from_name(s), s
 
 
 def test_no_per_row_python_udfs_in_engine():
@@ -259,38 +244,3 @@ def test_heavy_hitters_matches_brute_force(spark, keys, phi):
         if c * frac.denominator >= frac.numerator * n
     }
     assert got == want
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(
-                st.text(alphabet="ab c", min_size=0, max_size=6), min_size=0, max_size=14
-            ),
-        ),
-        min_size=1,
-        max_size=12,
-    ),
-    st.integers(min_value=1, max_value=5),
-)
-def test_gram_hashes64_batch_matches_scalar(tok_lists, n):
-    """The vectorized batch gram pass must agree with the scalar
-    reference on arbitrary ragged batches — including None rows, empty
-    tokens (from double spaces), and rows shorter than n."""
-    from schema_drift_detector_spark.functions.text import (
-        gram_hash64_py,
-        gram_hashes64_batch,
-    )
-
-    got = gram_hashes64_batch(tok_lists, n)
-    pos = gram_hashes64_batch(tok_lists, n, positions=True)
-    for toks, g, (p, gh) in zip(tok_lists, got, pos):
-        if toks is None or len(toks) < n:
-            assert g == [] and p == [] and gh == []
-            continue
-        m = len(toks) - n + 1
-        ref = [gram_hash64_py(toks[i : i + n]) for i in range(m)]
-        assert g == sorted(set(ref))
-        assert p == list(range(1, m + 1)) and gh == ref

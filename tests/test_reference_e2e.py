@@ -160,50 +160,6 @@ def test_salted_uniqueness_extreme_skew(spark):
     assert dups == {"HOT-KEY": n // 5 * 2}
 
 
-def test_winnowing_forms_value_parity(spark):
-    """The expression form and the Arrow form are the SAME function:
-    identical fingerprint sets per row — including repeated n-grams
-    (no dedup before windowing), non-ASCII code points, short and
-    empty strings — and for n=12 where naive 131^i weights would
-    overflow int64."""
-    from schema_drift_detector_spark.functions.text import (
-        winnowing_fingerprint,
-        winnowing_fingerprint_arrow,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("a", "the quick brown fox jumps over the lazy dog"),
-            ("b", "abababababababababab"),           # repeated n-grams
-            ("c", "straße größe münchen — çok güzel"),  # non-ASCII
-            ("d", "tiny"),                            # shorter than n
-            ("e", ""),                                # empty
-            ("f", "completely different content here entirely"),
-            ("g", None),                              # null text
-        ],
-        ["id", "t"],
-    )
-    for n, window in ((8, 4), (12, 5)):
-        expr = {
-            r.id: (None if r.fp is None else list(r.fp))
-            for r in df.select(
-                "id", winnowing_fingerprint("t", n=n, window=window).alias("fp")
-            ).collect()
-        }
-        arrow = {
-            r.id: (None if r.fp is None else list(r.fp))
-            for r in df.select(
-                "id", winnowing_fingerprint_arrow("t", n=n, window=window).alias("fp")
-            ).collect()
-        }
-        assert {k: v if v is None else sorted(v) for k, v in expr.items()} == {
-            k: v if v is None else sorted(v) for k, v in arrow.items()
-        }, f"divergence at n={n}"
-    assert expr["e"] == []
-    assert expr["g"] is None
-    assert len(expr["a"]) > 0 and expr["a"] != expr["f"]
-
-
 def test_heavy_hitters_exact_on_skewed_keys(spark):
     """heavy_hitters must return EXACTLY the keys at/above ceil(phi*N)
     with exact counts — including a 40% hot key and borderline keys —

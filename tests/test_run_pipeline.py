@@ -693,3 +693,24 @@ def test_null_partition_id_is_refused_before_any_write(spark, catalog, tmp_path)
     with pytest.raises(ValueError, match="run np0: column partition_id holds a null"):
         run_validation(spark, docs, catalog, out, run_id="np0", epoch=0)
     assert store.read_snapshots(spark, f"{out}/store") == []
+
+
+@pytest.mark.parametrize("changed", [{"epoch": 1}, {"entity": "other"}], ids=["epoch", "entity"])
+def test_resume_with_a_changed_epoch_or_entity_is_refused(spark, catalog, tmp_path, changed):
+    """A run_id is one snapshot of one entity and epoch (FIXTURES F5).
+    Re-invoking an interrupted run with another epoch or entity raises
+    before anything is written, instead of minting a second snapshot
+    for the run and skipping the partitions it already committed."""
+    cfg = SynthConfig(n_docs=800, n_partitions=4, n_assets=4_000)
+    docs = synth_documents(spark, cfg, epoch=0)
+    out = str(tmp_path / "out")
+    first = dict(run_id="R", entity="documents", epoch=0, partition_batches=2)
+    run_validation(spark, docs, catalog, out, fail_after_batches=1, **first)
+    snaps = store.read_snapshots(spark, f"{out}/store")
+    commits = M.read_commits(spark, out, "R")
+    assert len(snaps) == 1 and len(commits) == 1
+
+    with pytest.raises(ValueError, match="run R was started with entity='documents', epoch=0"):
+        run_validation(spark, docs, catalog, out, **{**first, **changed})
+    assert store.read_snapshots(spark, f"{out}/store") == snaps
+    assert M.read_commits(spark, out, "R") == commits
