@@ -18,8 +18,7 @@ Layout:
   plans/      run pipeline, snapshot store, checkpoint manifest, policy
 
 Corpus toolkit, not reached from plans.run and pending deletion (see
-tests/test_package_closure.py): functions/normalize,
-operators/{cleaning,layout,resample}.
+tests/test_package_closure.py): operators/resample.
 """
 
 __version__ = "0.1.0"

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -68,9 +68,6 @@ def duplicate_keys(
     The default is a one-phase groupBy(key).count(). Its map-side
     partial aggregation sends at most one row per key per map task, so
     even a hot key reaches its reducer as a handful of partial counts.
-    Over a table already bucketed on ``key`` (sources.io.write_bucketed,
-    read through spark.table) the layout co-locates identical keys and
-    this aggregation runs with ZERO Exchange.
 
     salt_buckets > 1 selects a salted two-phase aggregation. The salt
     must split IDENTICAL keys, so it derives from physical position
@@ -339,6 +336,17 @@ def check_referential_integrity(
 # Distribution drift (KS + chi-square on histogram sketches)
 # --------------------------------------------------------------------------
 
+def _chi2_term() -> Column:
+    """One bin's term of the two-sample chi-square of homogeneity between
+    counts b_cnt, c_cnt with side totals b_tot, c_tot:
+    (b·N_c − c·N_b)² / (N_b·N_c·(b+c)). Doubles, so the products cannot
+    overflow a long. try_divide makes a bin empty on both sides, or any
+    bin of a one-sided group (zero total), null, and the sum skips it."""
+    b, c = F.col("b_cnt").cast("double"), F.col("c_cnt").cast("double")
+    nb, nc = F.col("b_tot").cast("double"), F.col("c_tot").cast("double")
+    return F.try_divide(F.pow(b * nc - c * nb, 2), nb * nc * (b + c))
+
+
 def drift_statistics(
     base_hist: DataFrame,
     curr_hist: DataFrame,
@@ -352,9 +360,9 @@ def drift_statistics(
     the empirical CDFs, one aggregation for the statistics — so the
     check scales to arbitrarily many key groups in one job.
 
-    chi2 uses baseline proportions as expected counts for the current
-    totals; bins with zero expected mass contribute (obs²/ε-free) via
-    a 0.5 continuity floor on expected counts.
+    chi2 is the two-sample chi-square of homogeneity (_chi2_term): both
+    sides are samples, so a sparse baseline bin is not taken as the
+    true distribution.
     """
     keys = list(keys)
     b = base_hist.groupBy(*keys, "bin").agg(F.sum("bin_count").alias("b_cnt"))
@@ -371,14 +379,10 @@ def drift_statistics(
         .withColumn("c_tot", F.sum("c_cnt").over(wt))
         .withColumn("b_cdf", F.try_divide(F.sum("b_cnt").over(worder), F.col("b_tot")))
         .withColumn("c_cdf", F.try_divide(F.sum("c_cnt").over(worder), F.col("c_tot")))
-        .withColumn(
-            "b_exp",
-            F.greatest(F.try_divide(F.col("b_cnt"), F.col("b_tot")) * F.col("c_tot"), F.lit(0.5)),
-        )
     )
     return j.groupBy(*keys).agg(
         F.max(F.abs(F.col("b_cdf") - F.col("c_cdf"))).alias("ks_stat"),
-        F.sum(F.pow(F.col("c_cnt") - F.col("b_exp"), 2) / F.col("b_exp")).alias("chi2_stat"),
+        F.sum(_chi2_term()).alias("chi2_stat"),
         F.first("b_tot").alias("n_base"),
         F.first("c_tot").alias("n_curr"),
         F.count(F.lit(1)).alias("n_bins"),
@@ -403,16 +407,9 @@ def categorical_drift_statistics(
     wt = Window.partitionBy(*keys)
     # try_divide: see drift_statistics — null stats on one-sided groups,
     # failed closed by the verdict layer
-    j = (
-        j.withColumn("b_tot", F.sum("b_cnt").over(wt))
-        .withColumn("c_tot", F.sum("c_cnt").over(wt))
-        .withColumn(
-            "b_exp",
-            F.greatest(F.try_divide(F.col("b_cnt"), F.col("b_tot")) * F.col("c_tot"), F.lit(0.5)),
-        )
-    )
+    j = j.withColumn("b_tot", F.sum("b_cnt").over(wt)).withColumn("c_tot", F.sum("c_cnt").over(wt))
     return j.groupBy(*keys).agg(
-        F.sum(F.pow(F.col("c_cnt") - F.col("b_exp"), 2) / F.col("b_exp")).alias("chi2_stat"),
+        F.sum(_chi2_term()).alias("chi2_stat"),
         F.count(F.lit(1)).alias("n_categories"),
         F.first("b_tot").alias("n_base"),
         F.first("c_tot").alias("n_curr"),

@@ -72,28 +72,6 @@ def write_table(
         writer.parquet(location)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int,
-    mode: str = "overwrite",
-    sort: bool = True,
-) -> None:
-    """Persist as a bucketed (+sorted) table keyed on the join column.
-
-    The co-located-join primitive for repeated big-big joins at 10^12
-    docs: two tables bucketed on the same key with the same bucket count
-    join WITHOUT any Exchange (and without even a Sort when sorted) —
-    the shuffle is paid once at write time and amortized over every
-    later join/aggregation on that key. On Iceberg the equivalent is a
-    `bucket(N, key)` partition transform + storage-partitioned joins."""
-    w = df.write.mode(mode).format("parquet").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
 def input_fingerprint(df: DataFrame) -> str | None:
     """A hash of what ``df`` reads, to tell a resumed run whether its
     input was rewritten since the run started.

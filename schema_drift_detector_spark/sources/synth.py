@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..model import SPAN_STRUCT
+
 SPAN_KINDS = ("text", "image", "audio", "table")
 COUNTRIES = ("US", "IN", "DE", "BR", "JP", "NG", "FR", "AU")
 _WORDS = (
@@ -189,16 +191,7 @@ def _gen_docs(ids: np.ndarray, epoch: int, cfg: SynthConfig) -> pd.DataFrame:
 
 
 def documents_schema(epoch: int) -> T.StructType:
-    span = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("kind", T.StringType(), True),
-                T.StructField("text", T.StringType(), True),
-                T.StructField("media_ref", T.StringType(), True),
-                T.StructField("offset", T.IntegerType(), True),
-            ]
-        )
-    )
+    span = T.ArrayType(SPAN_STRUCT)
     if epoch >= 2:
         return T.StructType(
             [

@@ -106,6 +106,41 @@ def test_drift_statistics_identity(spark, docs):
         assert r.chi2_stat < 1e-9
 
 
+def test_sparse_bin_does_not_fail_a_matching_partition(spark):
+    """A tail bin with 2 baseline and 18 current rows, the other bins
+    matching, equal totals: the two-sample chi-square of homogeneity
+    gives that bin (2 − 18)² / 20 = 12.8, so the partition passes. The
+    one-sample form, which takes the baseline's 2 as the expected count,
+    gives it 128 and fails a partition whose KS is 0.0016. A bin empty
+    on both sides adds nothing."""
+    import json
+
+    from schema_drift_detector_spark.operators.constraints import check_categorical_drift
+
+    base = {0: 1016, **{i: 1000 for i in range(1, 10)}, 10: 2, 11: 0}
+    curr = {**{i: 1000 for i in range(10)}, 10: 18, 11: 0}
+    expected_chi2 = 16**2 / 2016 + 12.8
+
+    def hist(counts):
+        return spark.createDataFrame(
+            [(0, b, n) for b, n in counts.items()], "partition_id int, bin int, bin_count long"
+        )
+
+    (v,) = check_distribution_drift(hist(base), hist(curr), "s", 1).collect()
+    m = json.loads(v.metrics)
+    assert v.passed, v.summary
+    assert m["chi2_stat"] == pytest.approx(expected_chi2)
+    assert (m["n_bins"], m["n_base"], m["n_curr"]) == (12, 10_018, 10_018)
+    assert m["ks_stat"] == pytest.approx(16 / 10_018)
+
+    def kinds(counts):
+        return hist(counts).withColumnsRenamed({"bin": "category", "bin_count": "cnt"})
+
+    (cv,) = check_categorical_drift(kinds(base), kinds(curr), "s", 1).collect()
+    assert cv.passed, cv.summary
+    assert json.loads(cv.metrics)["chi2_stat"] == pytest.approx(expected_chi2)
+
+
 def test_categorical_drift_on_span_kinds(spark, docs):
     """Chi-square over the span-kind histograms: e0 vs e0 passes
     everywhere; a synthetic kind-shift fails only where injected."""

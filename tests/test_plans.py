@@ -87,32 +87,6 @@ def test_diff_is_pure_jvm_single_join(spark):
     assert plan.count("Join") == 1
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
-    """Two tables bucketed on the join key must join with NO Exchange —
-    the co-located-join path that amortizes one write-time shuffle over
-    every subsequent join at 10^12-doc scale."""
-    import uuid
-
-    from schema_drift_detector_spark.sources.io import write_bucketed
-
-    docs = synth_documents(spark, CFG, epoch=0).select("doc_id", "partition_id")
-    other = synth_documents(spark, CFG, epoch=0).select("doc_id", "quality")
-    ta, tb = f"ba_{uuid.uuid4().hex[:8]}", f"bb_{uuid.uuid4().hex[:8]}"
-    write_bucketed(docs, ta, "doc_id", 8)
-    write_bucketed(other, tb, "doc_id", 8)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table(ta).join(spark.table(tb), "doc_id")
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan  # bucket co-location: no shuffle at all
-        assert j.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql(f"DROP TABLE IF EXISTS {ta}")
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
-
-
 def test_ri_shuffle_join_fallback(spark, docs_path):
     """broadcast_catalog=False must produce a non-broadcast join (the
     huge-catalog path) and identical verdicts."""
@@ -197,38 +171,6 @@ def test_salted_uniqueness_agg_is_balanced(spark):
         if len(busy) < 4:
             continue  # coalesced/tiny stages carry no straggler signal
         assert busy[-1] / median(busy) <= 3.0, (s["stage"], busy[-5:])
-
-
-def test_bucketed_uniqueness_agg_zero_exchange(spark):
-    """Over a table bucketed on the key, duplicate_keys' default one-phase
-    aggregation runs with ZERO Exchange (the write-time shuffle is
-    amortized) and finds exactly the same duplicates as the salted path
-    over the same rows."""
-    import uuid
-
-    from schema_drift_detector_spark.operators.constraints import duplicate_keys
-    from schema_drift_detector_spark.sources.io import write_bucketed
-
-    df = spark.range(50_000).select(
-        F.when(F.col("id") % 1000 == 0, F.lit("DUP"))
-        .otherwise(F.format_string("d-%08d", F.col("id")))
-        .alias("doc_id")
-    )
-    tname = f"uq_bucketed_{uuid.uuid4().hex[:8]}"
-    write_bucketed(df, tname, "doc_id", 8)
-    try:
-        bucketed = spark.table(tname)
-        dups = duplicate_keys(bucketed, "doc_id")
-        plan = _plan(dups)
-        assert "Exchange" not in plan, plan
-        got = {r.doc_id: r.n_occurrences for r in dups.collect()}
-        ref = {
-            r.doc_id: r.n_occurrences
-            for r in duplicate_keys(bucketed, "doc_id", 16).collect()
-        }
-        assert got == ref == {"DUP": 50}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 
 def test_choose_salt_buckets_decision_and_unsalted_plan(spark):
