@@ -13,12 +13,12 @@ PySpark DataFrame API so Catalyst/Tungsten/AQE pick physical strategy.
 
 Layout:
   sources/    table IO seam (parquet/iceberg) + deterministic synthesizer
-  functions/  column-expression helpers (type inference, Bloom filter)
+  functions/  column-expression helpers (Bloom filter)
   operators/  profile, snapshot, diff, constraints, skew
   plans/      run pipeline, snapshot store, checkpoint manifest, policy
 
-Corpus toolkit, not reached from plans.run and pending deletion (see
-tests/test_package_closure.py): operators/resample.
+Every module and public top-level definition is reached from
+run_validation, perfbench/ or examples/ (tests/test_package_closure.py).
 """
 
 __version__ = "0.1.0"

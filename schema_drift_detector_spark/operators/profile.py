@@ -45,7 +45,6 @@ def profile_columns(
     group_cols: Sequence[str] = ("epoch", "partition_id"),
     snapshot_id: str | None = None,
     entity: str | None = None,
-    hll_lgk: int = 12,
 ) -> DataFrame:
     """Profile every atomic column of ``df`` per group in one shuffle.
 
@@ -97,7 +96,7 @@ def profile_columns(
             F.count(c).alias(f"__cnt_{i}"),
             F.min(c).cast("string").alias(f"__min_{i}"),
             F.max(c).cast("string").alias(f"__max_{i}"),
-            F.hll_sketch_agg(hc, F.lit(hll_lgk)).alias(f"__hll_{i}"),
+            F.hll_sketch_agg(hc, F.lit(12)).alias(f"__hll_{i}"),
         ]
     wide = df.groupBy(*group_cols).agg(*aggs)
 
@@ -131,7 +130,6 @@ def profile_columns(
 def profile_spans(
     docs: DataFrame,
     group_cols: Sequence[str] = ("epoch", "partition_id"),
-    spans_col: str = "spans",
 ) -> DataFrame:
     """Span-level profile of the interleaved payload (input_hint shape).
 
@@ -141,7 +139,7 @@ def profile_spans(
     Catalyst prunes unreferenced span struct fields from the scan.
     """
     group_cols = [c for c in group_cols if c in docs.columns]
-    s = docs.select(*group_cols, F.explode(spans_col).alias("s"))
+    s = docs.select(*group_cols, F.explode("spans").alias("s"))
     # two-level aggregation: per-(group, kind) partials roll up to the
     # group row — ONE explode, two shuffles, no join; the kind histogram
     # falls out of the rollup for free. Null kinds coalesce to 'unknown':

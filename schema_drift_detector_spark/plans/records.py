@@ -3,11 +3,9 @@
 The snapshot store and the checkpoint manifest hold tens of rows per
 run; a Spark job per read or append costs more than the rows are worth.
 These helpers go through the Hadoop ``FileSystem`` of the JVM the
-session already runs (the pattern of
-``operators/snapshot.py::read_csv_header_bounded``), so HDFS and
-object-store ``out_dir``s work with no extra dependency. ``file:``
-paths use the raw local file system, which writes no ``.crc`` side
-files.
+session already runs, so HDFS and object-store ``out_dir``s work with
+no extra dependency. ``file:`` paths use the raw local file system,
+which writes no ``.crc`` side files.
 
 A record is written once and never rewritten: its bytes go to a hidden
 temp name, then the temp file is published under the final name by a

@@ -37,7 +37,6 @@ def persist_snapshot(
     entity: str,
     epoch: int,
     fields: Sequence[dict[str, Any]],
-    created_by: str = "schema_drift_detector_spark",
     source_path: str | None = None,
     snapshot_id: str | None = None,
     previous_snapshot_id: str | None = None,
@@ -56,7 +55,7 @@ def persist_snapshot(
         "epoch": int(epoch),
         # fixed-width UTC ISO 8601, so string order is time order
         "timestamp": datetime.now(timezone.utc).isoformat(timespec="microseconds"),
-        "created_by": created_by,
+        "created_by": "schema_drift_detector_spark",
         "source_path": source_path,
         "previous_snapshot_id": previous_snapshot_id,
         "fields": [{k: f.get(k) for k in FIELD_SCHEMA.fieldNames()} for f in fields],
@@ -113,11 +112,6 @@ def resolve_snapshot_chain(
     if existing:
         previous = existing.get("previous_snapshot_id", previous)
     return snapshot_id, previous, existing is None
-
-
-def previous_snapshot(spark: SparkSession, store_dir: str, entity: str, before_id: str) -> str | None:
-    """Most recent snapshot for entity other than ``before_id`` (R11)."""
-    return _latest_other(read_snapshots(spark, store_dir), entity, before_id)
 
 
 def fields_of(spark: SparkSession, store_dir: str, snapshot_id: str) -> list[dict[str, Any]]:

@@ -74,9 +74,9 @@ def _mix(x: np.ndarray, salt: int) -> np.ndarray:
 def _gen_docs(ids: np.ndarray, epoch: int, cfg: SynthConfig) -> pd.DataFrame:
     """Pure function: document indices → generated rows (pandas).
 
-    Shared by the distributed generator and the test oracle
-    (expected_doc), guaranteeing the ground truth matches by
-    construction.
+    Shared by the distributed generator and the oracles (the tests and
+    perfbench/oracle.py call it directly), guaranteeing the ground truth
+    matches by construction.
     """
     n = len(ids)
     ids = ids.astype(np.int64)
@@ -232,12 +232,6 @@ def synth_documents(
     n_slices = parallelism or max(8, cfg.n_partitions)
     base = spark.range(0, cfg.n_docs, numPartitions=n_slices)
     return base.mapInPandas(gen, schema=schema)
-
-
-def expected_doc(doc_index: int, epoch: int, cfg: SynthConfig = SynthConfig()) -> dict:
-    """Test oracle: the exact row the generator produces for one doc."""
-    row = _gen_docs(np.array([doc_index], dtype=np.int64), epoch, cfg).iloc[0]
-    return row.to_dict()
 
 
 def synth_asset_catalog(spark: SparkSession, cfg: SynthConfig = SynthConfig()) -> DataFrame:

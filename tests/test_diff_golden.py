@@ -9,7 +9,6 @@ and from the severity lattice at
 
 from __future__ import annotations
 
-from schema_drift_detector_spark.functions.inference import infer_type_from_name
 from schema_drift_detector_spark.model import FIELD_SCHEMA
 from schema_drift_detector_spark.operators.diff import (
     NO_DRIFT_SUMMARY,
@@ -17,10 +16,17 @@ from schema_drift_detector_spark.operators.diff import (
     diff_fields,
     drift_report,
 )
-from schema_drift_detector_spark.operators.snapshot import fields_from_headers, header_fields
 
-V1_HEADERS = ["name", "date_of_birth", "gender", "company", "designation"]
-V2_HEADERS = V1_HEADERS + ["country"]
+# examples/*/csv_crawler_agent_output.json: the crawler's snapshots of
+# the two people-info.csv versions (v2 adds country)
+V1_ROWS = [
+    ("name", "string", True, 0),
+    ("date_of_birth", "date", True, 1),
+    ("gender", "string", True, 2),
+    ("company", "string", True, 3),
+    ("designation", "string", True, 4),
+]
+V2_ROWS = V1_ROWS + [("country", "string", True, 5)]
 
 
 def _fields(spark, rows):
@@ -32,35 +38,9 @@ def _dicts(rows):
     return [dict(zip(FIELD_SCHEMA.fieldNames(), r)) for r in rows]
 
 
-def test_name_heuristic_golden_parity():
-    # examples/*/csv_crawler_agent_output.json: every field 'string'
-    # except date_of_birth 'date' (the :30 quirk makes int/float dead)
-    assert [infer_type_from_name(h) for h in V2_HEADERS] == [
-        "string", "date", "string", "string", "string", "string",
-    ]
-    # the quirk itself: every int/float token contains a character of
-    # "country_code", so those branches are dead — all fall to 'string'
-    for name in ("age", "amount", "year", "count", "quantity", "price", "balance"):
-        assert infer_type_from_name(name) == "string"
-
-
-def test_crawler_snapshot_shape(spark):
-    want = [
-        ("name", "string", True, 0),
-        ("date_of_birth", "date", True, 1),
-        ("gender", "string", True, 2),
-        ("company", "string", True, 3),
-        ("designation", "string", True, 4),
-        ("country", "string", True, 5),
-    ]
-    f = fields_from_headers(spark, V2_HEADERS).orderBy("ordinal").collect()
-    assert [(r.name, r.dtype, r.nullable, r.ordinal) for r in f] == want
-    assert header_fields(V2_HEADERS) == _dicts(want)
-
-
 def test_no_drift_golden(spark):
-    v1 = fields_from_headers(spark, V1_HEADERS)
-    changes = diff_fields(v1, fields_from_headers(spark, V1_HEADERS))
+    v1 = _fields(spark, V1_ROWS)
+    changes = diff_fields(v1, _fields(spark, V1_ROWS))
     assert changes.count() == 0
     report = drift_report(changes).collect()[0]
     assert report.drift_detected is False
@@ -68,7 +48,7 @@ def test_no_drift_golden(spark):
     assert report.summary == NO_DRIFT_SUMMARY
     assert report.severity == "info"
 
-    py = diff_field_lists(header_fields(V1_HEADERS), header_fields(V1_HEADERS))
+    py = diff_field_lists(_dicts(V1_ROWS), _dicts(V1_ROWS))
     assert py == {
         "drift_detected": False, "changes": [], "summary": NO_DRIFT_SUMMARY, "severity": "info",
     }
@@ -76,8 +56,8 @@ def test_no_drift_golden(spark):
 
 def test_add_country_golden(spark):
     # examples/drift/detector_agent_output.json
-    v1 = fields_from_headers(spark, V1_HEADERS)
-    v2 = fields_from_headers(spark, V2_HEADERS)
+    v1 = _fields(spark, V1_ROWS)
+    v2 = _fields(spark, V2_ROWS)
     changes = diff_fields(v1, v2).collect()
     assert len(changes) == 1
     c = changes[0]
@@ -93,7 +73,7 @@ def test_add_country_golden(spark):
     assert report.summary == "add country (low)"
     assert report.severity == "info"
 
-    py = diff_field_lists(header_fields(V1_HEADERS), header_fields(V2_HEADERS))
+    py = diff_field_lists(_dicts(V1_ROWS), _dicts(V2_ROWS))
     assert py["changes"] == [
         {
             "op": "add",
@@ -171,7 +151,7 @@ def test_type_compare_case_insensitive(spark):
 def test_first_snapshot_all_adds(spark):
     # detector_agent.py:563 edge case: before=None ⇒ every field added
     empty = _fields(spark, [])
-    after = fields_from_headers(spark, V1_HEADERS)
+    after = _fields(spark, V1_ROWS)
     changes = diff_fields(empty, after)
     assert changes.count() == 5
     assert {r.op for r in changes.collect()} == {"add"}
@@ -179,7 +159,7 @@ def test_first_snapshot_all_adds(spark):
     assert report.severity == "info"
     assert report.summary.startswith("add name (low) ; add date_of_birth (low)")
 
-    py = diff_field_lists([], header_fields(V1_HEADERS))
+    py = diff_field_lists([], _dicts(V1_ROWS))
     assert len(py["changes"]) == 5
     assert {c["op"] for c in py["changes"]} == {"add"}
     assert py["severity"] == "info"

@@ -1,27 +1,41 @@
-"""The reference's original use case end-to-end: a CSV lands, the
-crawler snapshots its header (metadata only), the store chains
-versions, the detector diffs, healing/notification/decision fire —
-exactly the examples/{no_drfit,drift} scenario, on this engine."""
+"""The reference's original use case end-to-end: a CSV lands, its
+schema is snapshotted (metadata only), the store chains versions, the
+detector diffs, healing/notification/decision fire — exactly the
+examples/{no_drfit,drift} scenario, on this engine."""
 
 from __future__ import annotations
 
 import pytest
 
 from schema_drift_detector_spark.operators.diff import diff_field_lists
-from schema_drift_detector_spark.operators.snapshot import header_fields
+from schema_drift_detector_spark.operators.snapshot import field_list
 from schema_drift_detector_spark.plans import store
 from schema_drift_detector_spark.plans.policy import decide, healing_plan, notification
 
 V1 = "name,date_of_birth,gender,company,designation\nAda,1815-12-10,f,Analytical,Engineer\n"
 V2 = "name,date_of_birth,gender,company,designation,country\nAda,1815-12-10,f,Analytical,Engineer,UK\n"
+ENTITY = "people-info.csv"
 
 
-def _csv_headers(spark, tmp, content, fname):
+def _csv_fields(spark, tmp, content, fname):
+    """The engine's snapshot of a CSV file as Spark reads it: every
+    column a nullable string."""
     p = f"{tmp}/{fname}"
     with open(p, "w") as f:
         f.write(content)
-    df = spark.read.option("header", True).csv(p)
-    return df.columns
+    return field_list(spark.read.option("header", True).csv(p).schema)
+
+
+def _snapshot(spark, store_dir, epoch, fields):
+    """Persist one snapshot as run_validation does; returns its id and
+    the previous id the chain resolved for it."""
+    run_id = f"day-{epoch}"
+    sid, prev, _ = store.resolve_snapshot_chain(spark, store_dir, ENTITY, epoch, run_id)
+    store.persist_snapshot(
+        spark, store_dir, ENTITY, epoch, fields,
+        source_path=run_id, snapshot_id=sid, previous_snapshot_id=prev,
+    )
+    return sid, prev
 
 
 def test_csv_drift_scenario(spark, tmp_path_factory):
@@ -29,15 +43,13 @@ def test_csv_drift_scenario(spark, tmp_path_factory):
     store_dir = f"{tmp}/store"
 
     # day 1: v1 lands → first snapshot
-    h1 = _csv_headers(spark, tmp, V1, "people-info-v1.csv")
-    f1 = header_fields(h1)
-    s1 = store.persist_snapshot(spark, store_dir, "people-info.csv", 0, f1)
+    f1 = _csv_fields(spark, tmp, V1, "people-info-v1.csv")
+    s1, prev1 = _snapshot(spark, store_dir, 0, f1)
+    assert prev1 is None
 
     # day 2: v2 lands (adds country) → diff vs previous
-    h2 = _csv_headers(spark, tmp, V2, "people-info-v2.csv")
-    f2 = header_fields(h2)
-    s2 = store.persist_snapshot(spark, store_dir, "people-info.csv", 1, f2)
-    prev = store.previous_snapshot(spark, store_dir, "people-info.csv", s2)
+    f2 = _csv_fields(spark, tmp, V2, "people-info-v2.csv")
+    _, prev = _snapshot(spark, store_dir, 1, f2)
     assert prev == s1
 
     before = store.fields_of(spark, store_dir, prev)
@@ -61,8 +73,7 @@ def test_csv_drift_scenario(spark, tmp_path_factory):
     assert decide(True, rep["severity"], heal, auto_heal_policy=True) == "auto_heal"
 
     # day 3: v2 lands again → no drift → continue
-    s3 = store.persist_snapshot(spark, store_dir, "people-info.csv", 2, f2)
-    prev3 = store.previous_snapshot(spark, store_dir, "people-info.csv", s3)
+    _, prev3 = _snapshot(spark, store_dir, 2, f2)
     rep3 = diff_field_lists(store.fields_of(spark, store_dir, prev3), f2)
     assert rep3["drift_detected"] is False
     assert rep3["summary"] == "no schema drift detected"
@@ -70,18 +81,16 @@ def test_csv_drift_scenario(spark, tmp_path_factory):
 
 
 def test_golden_csv_files_end_to_end(spark, tmp_path_factory):
-    """The reference's example files through the bounded 32 KiB header
-    read (R4, csv_crawler_agent.py:129-141): snapshot fields and the
-    drift report must reproduce examples/*/csv_crawler_agent_output.json
-    and examples/drift/detector_agent_output.json field-for-field.
+    """The reference crawler's snapshots of its two example files
+    (examples/*/csv_crawler_agent_output.json), chained through the
+    store: the stored fields keep every golden name, type, nullability
+    and ordinal, and the drift report reproduces
+    examples/drift/detector_agent_output.json field-for-field.
 
-    tests/fixtures/reference_examples vendors the two people-info.csv
-    header lines and, of each golden JSON, the fields asserted here
-    (FIXTURES.md F4)."""
+    tests/fixtures/reference_examples vendors, of each golden JSON, the
+    fields asserted here (FIXTURES.md F4)."""
     import json
     from pathlib import Path
-
-    from schema_drift_detector_spark.operators.snapshot import read_csv_header_bounded
 
     ex = Path(__file__).resolve().parent / "fixtures" / "reference_examples"
     store_dir = f"{tmp_path_factory.mktemp('golden')}/store"
@@ -92,19 +101,20 @@ def test_golden_csv_files_end_to_end(spark, tmp_path_factory):
 
     reports = {}
     for i, scenario in enumerate(("no_drfit", "drift")):
-        headers = read_csv_header_bounded(spark, f"{ex}/{scenario}/people-info.csv")
-        fields = header_fields(headers)
-        sid = store.persist_snapshot(spark, store_dir, "people-info.csv", i, fields)
-        got = store.fields_of(spark, store_dir, sid)  # the stored record
         want = golden_fields(scenario)
+        fields = [
+            {"name": w["name"], "dtype": w["type"], "nullable": w["nullable"], "ordinal": w["ordinal"]}
+            for w in want
+        ]
+        sid, prev = _snapshot(spark, store_dir, i, fields)
+        got = store.fields_of(spark, store_dir, sid)  # the stored record
         assert [g["name"] for g in got] == [w["name"] for w in want]
         assert [g["dtype"] for g in got] == [w["type"] for w in want]
         assert [g["nullable"] for g in got] == [w["nullable"] for w in want]
         assert [g["ordinal"] for g in got] == [w["ordinal"] for w in want]
-        prev = store.previous_snapshot(spark, store_dir, "people-info.csv", sid)
         if prev:
             before = store.fields_of(spark, store_dir, prev)
-            reports[scenario] = diff_field_lists(before, fields)
+            reports[scenario] = diff_field_lists(before, got)
 
     # golden: examples/drift/detector_agent_output.json (drift_report node)
     with open(f"{ex}/drift/detector_agent_output.json") as f:
@@ -123,23 +133,6 @@ def test_golden_csv_files_end_to_end(spark, tmp_path_factory):
     assert g["after"]["dtype"] == w["after"]["type"]
     assert g["after"]["nullable"] == w["after"]["nullable"]
     assert g["after"]["ordinal"] == w["after"]["ordinal"]
-
-
-def test_bounded_header_read_truncates(spark, tmp_path_factory):
-    """max_bytes caps the read even when the header line is longer —
-    reference behavior: parse whatever fits in the first max_bytes."""
-    from schema_drift_detector_spark.operators.snapshot import read_csv_header_bounded
-
-    tmp = tmp_path_factory.mktemp("bounded")
-    p = f"{tmp}/wide.csv"
-    cols = [f"col_{i:04d}" for i in range(200)]
-    with open(p, "w") as f:
-        f.write(",".join(cols) + "\n" + ",".join(["x"] * 200) + "\n")
-    full = read_csv_header_bounded(spark, p)
-    assert full == cols
-    capped = read_csv_header_bounded(spark, p, max_bytes=64)
-    assert 0 < len(capped) < 200
-    assert capped == [c.strip() for c in ",".join(cols)[:64].split(",")]
 
 
 def test_salted_uniqueness_extreme_skew(spark):

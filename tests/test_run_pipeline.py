@@ -406,6 +406,42 @@ def test_auto_salt_spec_is_accepted_and_verdicts_hold(spark, docs0, catalog, tmp
     assert env_resumed["run"]["batches_executed"] == 0
 
 
+@pytest.mark.parametrize(
+    "spec, named",
+    [
+        ({"uniqueness": {"salt_bucket": 16}}, "'salt_bucket'.*valid keys: \\['key', 'salt_buckets'\\]"),
+        ({"uniquness": {"key": "doc_id"}}, "'uniquness'.*valid sections"),
+    ],
+    ids=["key", "section"],
+)
+def test_unknown_spec_key_or_section_is_refused_before_any_write(
+    spark, docs0, catalog, tmp_path, spec, named
+):
+    """A misspelt spec key or section raises a ValueError naming it and
+    what is valid, before the run writes anything under out_dir."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=named):
+        run_validation(spark, docs0, catalog, str(out), run_id="strict", spec=spec)
+    assert not out.exists() or not any(out.iterdir())
+
+
+def test_docs_validated_counts_each_partition_across_a_resume(spark, docs0, catalog, tmp_path):
+    """Each commit record's docs_validated is its partition's row count,
+    summed over the partition's epoch groups, for the batch an
+    interrupted run committed and for the batch its resume committed."""
+    docs = docs0.withColumn("epoch", F.pmod(F.hash("doc_id"), F.lit(2)).cast("int"))
+    assert {r.epoch for r in docs.select("epoch").distinct().collect()} == {0, 1}
+    want = {r.partition_id: r["count"] for r in docs.groupBy("partition_id").count().collect()}
+
+    out = str(tmp_path / "out")
+    run_validation(spark, docs, catalog, out, run_id="dv", partition_batches=2, fail_after_batches=1)
+    first = [p for c in M.read_commits(spark, out, "dv") for p in c["partitions"]]
+    assert 0 < len(first) < len(want)
+    run_validation(spark, docs, catalog, out, run_id="dv", partition_batches=2)
+    got = {p["partition_id"]: p["docs_validated"] for c in M.read_commits(spark, out, "dv") for p in c["partitions"]}
+    assert got == want
+
+
 def test_snapshot_durable_before_outputs_and_resume_reuses_id(
     spark, docs0, catalog, tmp_path_factory
 ):

@@ -9,7 +9,6 @@ import pytest
 from schema_drift_detector_spark.sources.synth import (
     SynthConfig,
     _gen_docs,
-    expected_doc,
     synth_asset_catalog,
     synth_documents,
 )
@@ -34,7 +33,7 @@ def test_spark_generation_matches_oracle(spark):
     rows = {r.doc_id: r for r in df.collect()}
     # non-dup partitions: doc_id is a pure function of index
     for i in [0, 1, 9, 100, 399]:
-        exp = expected_doc(i, 0, CFG)
+        exp = _gen_docs(np.array([i], dtype=np.int64), 0, CFG).iloc[0]
         if exp["doc_id"] not in rows:
             continue
         got = rows[exp["doc_id"]]
